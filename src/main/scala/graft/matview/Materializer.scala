@@ -1,5 +1,7 @@
 package graft.matview
 
+import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors}
+
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -21,6 +23,18 @@ import org.apache.spark.sql.functions.{col, count, lit, max, min, sum}
   * sandbox caveat as the Snapshots commit log; a cluster deployment
   * would stage through the Hadoop FileSystem API (rename on HDFS, a
   * commit protocol on S3) with the identical old-aside-first shape.
+  *
+  * Concurrency contract: [[create]] (and so [[createAll]], which runs up
+  * to `defaultParallelism` creates at once) is safe from several threads.
+  *  - The registries `deps`, `aggSpecs`, `joinSpecs` and `catalogBacked`
+  *    are read and written only under this instance's monitor, which is
+  *    never held across a Spark job.
+  *  - The per-name lock of `stagedOverwrite` still serializes the
+  *    read-merge-swap of one name; different names never contend.
+  *  - A view may only read MVs it declares in `dependsOn`: [[createAll]]
+  *    starts a view once its declared dependencies are built and trusts
+  *    nothing else, so an undeclared read can see a missing or
+  *    half-replaced MV.
   */
 final class Materializer(spark: SparkSession, scratchDir: String) {
 
@@ -43,7 +57,6 @@ final class Materializer(spark: SparkSession, scratchDir: String) {
   /** CREATE MATERIALIZED VIEW name AS df (S5). Returns the persisted
     * relation (a fresh scan, not the in-memory plan). */
   def create(name: String, df: DataFrame, dependsOn: Seq[String] = Nil): DataFrame = {
-    require(dependsOn.forall(deps.contains), s"unknown dependency in $dependsOn")
     require(!dependsOn.contains(name), s"$name cannot depend on itself")
     // a re-create is a FULL REFRESH: deregister first, or the rewrite rule
     // (still holding the old defining plan) would substitute the recompute
@@ -51,13 +64,80 @@ final class Materializer(spark: SparkSession, scratchDir: String) {
     // drop any stale incremental spec — a recreated MV's grain need not
     // match the old declaration, and a later refreshIncremental merging
     // with the stale (keys, measures) would be silently wrong
+    synchronized {
+      require(dependsOn.forall(deps.contains), s"unknown dependency in $dependsOn")
+      aggSpecs.remove(name)
+      joinSpecs.remove(name)
+    }
     rewrite.foreach(_.deregister(name))
-    aggSpecs.remove(name)
-    joinSpecs.remove(name)
     stagedOverwrite(name, () => df)
-    deps(name) = dependsOn
+    synchronized { deps(name) = dependsOn }
     rewrite.foreach(_.register(name, df, () => table(name)))
     table(name)
+  }
+
+  /** CREATE every view of a declared DAG, each as soon as the views it
+    * `dependsOn` are built, at most `defaultParallelism` at once; returns
+    * the views in declaration order. The list must be in dependency
+    * order: every dependency is declared earlier in it or already
+    * registered. The first failure stops new views from starting; the
+    * running ones finish, then the failure is rethrown. The pool lives
+    * for this call only: its threads are started from the caller's
+    * thread, so they inherit its Spark local properties (job group,
+    * description, tracing tags). The registry keeps declaration order,
+    * whatever order the views finished in. */
+  def createAll(views: Seq[Materializer.View]): Seq[DataFrame] = {
+    val names = views.map(_.name)
+    require(names.distinct.size == names.size, s"duplicate view in $names")
+    views.zipWithIndex.foreach { case (v, i) =>
+      val earlier = names.take(i).toSet
+      require(v.dependsOn.forall(d => earlier(d) || (exists(d) && !names.contains(d))),
+        s"${v.name}: every dependency in ${v.dependsOn} must be declared " +
+          "earlier or already exist")
+    }
+    val waiting = mutable.LinkedHashMap.from(views.map(v =>
+      v.name -> (v, mutable.Set.from(v.dependsOn.filter(names.contains)))))
+    val threads = math.max(1,
+      math.min(spark.sparkContext.defaultParallelism, views.size))
+    val pool = Executors.newFixedThreadPool(threads, (r: Runnable) => {
+      val t = new Thread(r, "matview-create")
+      t.setDaemon(true)
+      t
+    })
+    val done = new ExecutorCompletionService[String](pool)
+    var running = 0
+    var failure: Throwable = null
+    // submits only what a free thread runs at once, so after a failure
+    // nothing queued is left to start
+    def startReady(): Unit =
+      while (failure == null && running < threads &&
+          waiting.exists(_._2._2.isEmpty)) {
+        val (v, _) = waiting.collectFirst { case (_, e) if e._2.isEmpty => e }.get
+        waiting.remove(v.name)
+        done.submit(() => { create(v.name, v.define(), v.dependsOn); v.name })
+        running += 1
+      }
+    try {
+      startReady()
+      while (running > 0) {
+        val f = done.take()
+        running -= 1
+        try {
+          val built = f.get()
+          waiting.values.foreach(_._2 -= built)
+        } catch {
+          case e: ExecutionException =>
+            if (failure == null) failure = e.getCause
+            else failure.addSuppressed(e.getCause)
+        }
+        startReady()
+      }
+    } finally pool.shutdownNow()
+    if (failure != null) throw failure
+    synchronized {
+      names.foreach(n => deps.remove(n).foreach(d => deps(n) = d))
+    }
+    names.map(table)
   }
 
   /** Per-name monitor: refreshes/creates of the same MV serialize (two
@@ -117,7 +197,7 @@ final class Materializer(spark: SparkSession, scratchDir: String) {
     // spec recorded AFTER create (which clears stale specs on re-create)
     val out = create(name,
       base.groupBy(keys.map(col): _*).agg(aggCols.head, aggCols.tail: _*))
-    aggSpecs(name) = (keys, measures)
+    synchronized { aggSpecs(name) = (keys, measures) }
     out
   }
 
@@ -135,16 +215,18 @@ final class Materializer(spark: SparkSession, scratchDir: String) {
       on: Seq[String], keys: Seq[String],
       measures: Seq[Materializer.Measure]): DataFrame = {
     val out = createAggregated(name, fact.join(dim, on), keys, measures)
-    joinSpecs(name) = (dim, on)
+    synchronized { joinSpecs(name) = (dim, on) }
     out
   }
 
   /** REFRESH from a fact-only delta: join the delta against the remembered
     * dimension, then merge like [[refreshIncremental]]. */
   def refreshJoinDelta(name: String, deltaFact: DataFrame): DataFrame = {
-    require(joinSpecs.contains(name),
-      s"$name was not created via createJoinAggregated")
-    val (dim, on) = joinSpecs(name)
+    val (dim, on) = synchronized {
+      require(joinSpecs.contains(name),
+        s"$name was not created via createJoinAggregated")
+      joinSpecs(name)
+    }
     refreshIncremental(name, deltaFact.join(dim, on))
   }
 
@@ -155,13 +237,15 @@ final class Materializer(spark: SparkSession, scratchDir: String) {
     * column types (a re-summed decimal widens; the merged total provably
     * fits the stored type). */
   def refreshIncremental(name: String, deltaBase: DataFrame): DataFrame = {
-    require(aggSpecs.contains(name), s"$name was not created via createAggregated")
+    val (keys, measures) = synchronized {
+      require(aggSpecs.contains(name), s"$name was not created via createAggregated")
+      aggSpecs(name)
+    }
     // the stored relation is about to diverge from the defining plan the
     // rewrite registry holds (storage will cover base+delta while the
     // registered plan describes base only) — deregister, or a later query
     // matching the stale defining plan would be rewritten to merged data
     rewrite.foreach(_.deregister(name))
-    val (keys, measures) = aggSpecs(name)
     // the merged plan READS the current storage, so the whole
     // read-merge-plan construction happens inside the staged swap's
     // per-name lock (via the thunk): a concurrent refresh loser would
@@ -195,7 +279,7 @@ final class Materializer(spark: SparkSession, scratchDir: String) {
     * defining query from base tables, so a redefine that misdescribes
     * storage hash-fails. */
   def redefine(name: String, defining: DataFrame): Unit = {
-    require(deps.contains(name), s"no such materialized view: $name")
+    require(exists(name), s"no such materialized view: $name")
     rewrite.foreach(_.register(name, defining, () => table(name)))
   }
 
@@ -204,7 +288,7 @@ final class Materializer(spark: SparkSession, scratchDir: String) {
     * enabled query can't silently re-plan later unrelated queries in the
     * same session. */
   def deregisterAll(): Unit =
-    rewrite.foreach(r => deps.keys.foreach(r.deregister))
+    rewrite.foreach(r => synchronized(deps.keys.toList).foreach(r.deregister))
 
   /** Bucketed materialization into the session catalog: co-locates future
     * joins/aggregations on the bucket columns — two tables bucketed the same
@@ -228,20 +312,32 @@ final class Materializer(spark: SparkSession, scratchDir: String) {
       .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .saveAsTable(name)
-    deps(name) = Nil
-    catalogBacked += name
+    synchronized {
+      deps(name) = Nil
+      catalogBacked += name
+    }
     spark.table(name)
   }
 
-  /** Read a materialized view back (plans a parquet scan; bucketed MVs go
+  /** Read a materialized view back (plans a parquet scan with the schema
+    * read from the written footers, so no Spark job runs; bucketed MVs go
     * through the catalog so bucketing metadata survives). */
-  def table(name: String): DataFrame = {
+  def table(name: String): DataFrame =
+    if (isCatalogBacked(name)) spark.table(name)
+    else Footers.read(spark, Seq(path(name)))
+
+  /** Row count of a materialized view, from its footers where it is a
+    * plain parquet directory. */
+  def rows(name: String): Long =
+    if (isCatalogBacked(name)) spark.table(name).count()
+    else Footers.rowCount(spark, Seq(path(name)))
+
+  private def isCatalogBacked(name: String): Boolean = synchronized {
     require(deps.contains(name), s"no such materialized view: $name")
-    if (catalogBacked(name)) spark.table(name)
-    else spark.read.parquet(path(name))
+    catalogBacked(name)
   }
 
-  def exists(name: String): Boolean = deps.contains(name)
+  def exists(name: String): Boolean = synchronized(deps.contains(name))
 
   private def dependentsOf(name: String): Seq[String] =
     deps.collect { case (n, ds) if ds.contains(name) => n }.toSeq
@@ -249,7 +345,7 @@ final class Materializer(spark: SparkSession, scratchDir: String) {
   /** DROP ... CASCADE (S3): removes `name` and everything downstream,
     * dependents first; returns the drop order. Deterministic: DFS over the
     * insertion-ordered registry. */
-  def dropCascade(name: String): Seq[String] = {
+  def dropCascade(name: String): Seq[String] = synchronized {
     require(deps.contains(name), s"no such materialized view: $name")
     val order = mutable.LinkedHashSet.empty[String]
     val seen = mutable.Set.empty[String] // guard: a dependency cycle built
@@ -292,6 +388,11 @@ object Materializer {
 
   def apply(spark: SparkSession): Materializer =
     new Materializer(spark, defaultScratch)
+
+  /** One view of a [[Materializer.createAll]] DAG: its name, the MVs its
+    * definition reads, and the definition, evaluated once those exist. */
+  final case class View(
+      name: String, dependsOn: Seq[String], define: () => DataFrame)
 
   /** A re-aggregable measure: how to compute it over base rows and how to
     * merge two already-aggregated partials (the standard distributive-

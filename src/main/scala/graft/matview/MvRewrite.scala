@@ -31,32 +31,40 @@ import org.apache.spark.sql.catalyst.rules.Rule
   */
 final class MvRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
 
-  /** name -> (defining plan analyzed, persisted relation plan). */
+  /** name -> (defining plan analyzed, persisted relation plan). Guarded
+    * by this rule's monitor: MVs are (de)registered from concurrent
+    * creates while other threads optimize queries through the rule. */
   private val registry = mutable.LinkedHashMap.empty[String, (LogicalPlan, () => LogicalPlan)]
 
-  def register(name: String, defining: DataFrame, read: () => DataFrame): Unit =
+  def register(name: String, defining: DataFrame, read: () => DataFrame): Unit = {
     // store the OPTIMIZED defining plan: extraOptimizations run after the
     // main optimizer batches, so subtrees arrive post-pruning/pushdown and
     // must be compared in the same normal form
-    registry(name) = (defining.queryExecution.optimizedPlan,
-      () => read().queryExecution.analyzed)
+    val plan = defining.queryExecution.optimizedPlan
+    synchronized { registry(name) = (plan, () => read().queryExecution.analyzed) }
+  }
 
-  def deregister(name: String): Unit = registry.remove(name)
+  def deregister(name: String): Unit = synchronized { registry.remove(name) }
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (registry.isEmpty) plan
+  override def apply(plan: LogicalPlan): LogicalPlan = {
+    val entries = synchronized(registry.values.toList)
+    if (entries.isEmpty) plan
     else plan.transformUp {
       case subtree =>
-        exactSubstitution(subtree).getOrElse(subtree match {
-          case agg: Aggregate => bestContainment(agg).getOrElse(agg)
+        exactSubstitution(entries, subtree).getOrElse(subtree match {
+          case agg: Aggregate => bestContainment(entries, agg).getOrElse(agg)
           case other => other
         })
     }
+  }
+
+  private type Entry = (LogicalPlan, () => LogicalPlan)
 
   /** Exact-equivalence substitution: first registered MV whose defining
     * plan sameResult-matches the subtree. */
-  private def exactSubstitution(subtree: LogicalPlan): Option[LogicalPlan] =
-    registry.values.collectFirst {
+  private def exactSubstitution(entries: Seq[Entry],
+      subtree: LogicalPlan): Option[LogicalPlan] =
+    entries.collectFirst {
       case (defining, readRelation) if subtree.sameResult(defining) =>
         val relation = readRelation()
         // map the MV relation's output attributes onto the subtree's
@@ -76,8 +84,9 @@ final class MvRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     * stored rows (the reference's own View2-over-View1 reasoning): at
     * kilobyte scale two MVs' parquet sizes are footer-dominated and can
     * tie exactly, and a registration-order pick would be arbitrary. */
-  private def bestContainment(agg: Aggregate): Option[LogicalPlan] = {
-    val candidates = registry.values.flatMap { case (defining, read) =>
+  private def bestContainment(entries: Seq[Entry],
+      agg: Aggregate): Option[LogicalPlan] = {
+    val candidates = entries.flatMap { case (defining, read) =>
       rollupFromMv(agg, defining, read).map { p =>
         val grain = defining match {
           case a: Aggregate => a.groupingExpressions.size

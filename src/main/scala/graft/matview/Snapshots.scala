@@ -374,7 +374,7 @@ class Snapshots(spark: SparkSession, root: String,
       statsCols: Seq[String], bloomCols: Seq[String],
       recordTxns: Seq[String]): Unit = {
     df.write.mode("overwrite").parquet(dataDir)
-    val written = spark.read.parquet(dataDir)
+    val written = Footers.read(spark, Seq(dataDir))
     val fields = written.schema
     val aggs = statsCols.flatMap { name =>
       val (fam, norm) = statsFamily(fields(name).dataType,
@@ -492,8 +492,8 @@ class Snapshots(spark: SparkSession, root: String,
       }
     }
     PointRead(
-      if (kept.isEmpty) spark.read.parquet(dirs.head).limit(0)
-      else spark.read.parquet(kept: _*),
+      if (kept.isEmpty) Footers.read(spark, Seq(dirs.head)).limit(0)
+      else Footers.read(spark, kept),
       kept.size, zoneKept.size, dirs.size)
   }
 
@@ -521,15 +521,16 @@ class Snapshots(spark: SparkSession, root: String,
       }
     }
     PrunedRead(
-      if (kept.isEmpty) spark.read.parquet(dirs.head).limit(0)
-      else spark.read.parquet(kept: _*),
+      if (kept.isEmpty) Footers.read(spark, Seq(dirs.head)).limit(0)
+      else Footers.read(spark, kept),
       kept.size, dirs.size)
   }
 
   /** Read the table AS OF `version`: a union scan of exactly the data
-    * directories that version's manifest lists. */
+    * directories that version's manifest lists (schema from the written
+    * footers, see [[Footers]]). */
   def read(t: String, version: Int): DataFrame =
-    spark.read.parquet(readManifest(t, version): _*)
+    Footers.read(spark, readManifest(t, version))
 
   def readLatest(t: String): DataFrame = read(t, latest(t))
 
@@ -554,7 +555,7 @@ class Snapshots(spark: SparkSession, root: String,
   def readDelta(t: String, v: Int): DataFrame = {
     val prev = if (v == 0) Set.empty[String]
                else readManifest(t, v - 1).toSet
-    spark.read.parquet(readManifest(t, v).filterNot(prev): _*)
+    Footers.read(spark, readManifest(t, v).filterNot(prev))
   }
 
   /** Retention pass (the VACUUM of the log-structured formats): keep

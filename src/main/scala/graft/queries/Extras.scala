@@ -606,9 +606,12 @@ object Extras {
     import s.implicits._
     val qs = Seq(0.5, 0.9, 0.99)
     val targets = broadcast(qs.toDF("q"))
+    // the rank base counts what the sketch folds: non-null v only (null
+    // v rows would raise n past the sketch's total, so a high quantile's
+    // rank could exceed every bucket's cumulative count and drop its row)
     val sk = li.groupBy("flag").agg(
       graft.functions.QuantileSketchAgg.quantile_sketch(col("v")).as("sk"),
-      count(lit(1)).as("n"))
+      count(col("v")).as("n"))
     val buckets = sk
       .select(col("flag"), col("n"), posexplode(col("sk")).as(Seq("idx", "cnt")))
       .filter(col("cnt") > 0)

@@ -514,7 +514,7 @@ object StreamingOps {
               // under micro-batch replay (re-replacing with the same
               // state is a no-op), so no txn marker is needed here
               val merged = graft.matview.Merge.replace(
-                spark.read.parquet(mvPath.toString), upserts,
+                graft.matview.Footers.read(spark, Seq(mvPath.toString)), upserts,
                 Seq("hour_start", "event_type"))
               val tmp = Paths.get(mvPath.toString + "__stage")
               merged.write.mode("overwrite").parquet(tmp.toString)
@@ -532,7 +532,7 @@ object StreamingOps {
       .start()
     try q.processAllAvailable()
     finally q.stop()
-    spark.read.parquet(mvPath.toString)
+    graft.matview.Footers.read(spark, Seq(mvPath.toString))
       .orderBy("hour_start", "event_type")
   }
 
@@ -641,7 +641,7 @@ object StreamingOps {
             lww.select(col("k"), col("b_alive").as("alive"),
               col("b_val").as("balance"), col("bn").as("n_changes"))
           else {
-            val prev = spark.read.parquet(statePath.toString)
+            val prev = graft.matview.Footers.read(spark, Seq(statePath.toString))
             // batch-wins is decided on KEY PRESENCE (lww("k") not null),
             // never by coalescing payloads: a last writer whose value IS
             // NULL must overwrite the older balance with NULL, exactly
@@ -670,7 +670,7 @@ object StreamingOps {
       .start()
     try q.processAllAvailable()
     finally q.stop()
-    val state = spark.read.parquet(statePath.toString)
+    val state = graft.matview.Footers.read(spark, Seq(statePath.toString))
     val base = graft.Tables.load(spark, dir, "customer")
       .select(col("c_custkey").cast("long").as("ck"), col("c_acctbal"))
     base.join(state, col("ck") === col("k"), "full_outer")

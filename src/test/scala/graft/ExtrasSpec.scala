@@ -57,6 +57,25 @@ class ExtrasSpec extends AnyFunSuite {
     }
   }
 
+  test("agg_quantile_sketch: null values leave the quantiles of the " +
+      "non-null values unchanged") {
+    import spark.implicits._
+    val vals: Seq[(String, Option[Long])] = (0 until 3000).map { i =>
+      val flag = Seq("A", "B")(i % 2)
+      // B carries nulls on most rows: counted in the rank base they
+      // would push the 0.99 rank past every bucket
+      val isNull = if (flag == "A") i % 10 == 0 else i % 4 != 1
+      flag -> (if (isNull) None
+        else Some((graft.functions.Mix64.mix(i.toLong) & 0xFFFFFL).abs))
+    }
+    val withNulls = vals.toDF("flag", "v")
+    def quantiles(df: org.apache.spark.sql.DataFrame) =
+      Extras.aggQuantileSketchOf(spark, df).collect().map(_.toSeq).toSeq
+    val expected = quantiles(withNulls.filter(col("v").isNotNull))
+    assert(expected.size == 6)
+    assert(quantiles(withNulls) == expected)
+  }
+
   test("markov transition probabilities sum to 1 per from_type") {
     val rows = graft.ext.EventOps.eventsMarkovTransitions(spark, SF)
       .collect()

@@ -171,4 +171,58 @@ class MaterializerSpec extends AnyFunSuite {
       "dropCascade must not drop the user's shadowing view")
     spark.catalog.dropTempView("mv_shadow")
   }
+
+  test("createAll builds a DAG in declaration order, runs definitions " +
+      "with the caller's local properties, and checks the declared order") {
+    import graft.matview.Materializer.View
+    val m = freshMat("dag")
+    val r = graft.Tables.load(spark, SF, "region")
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    def probe(name: String)(df: => org.apache.spark.sql.DataFrame) =
+      () => {
+        seen.put(name, String.valueOf(sc.getLocalProperty("graft.spec.tag")))
+        df
+      }
+    val views = Seq(
+      View("d_root", Nil, probe("d_root")(r)),
+      View("d_left", Seq("d_root"),
+        probe("d_left")(m.table("d_root").filter(col("r_regionkey") < 2))),
+      View("d_right", Seq("d_root"),
+        probe("d_right")(m.table("d_root").filter(col("r_regionkey") >= 2))),
+      View("d_side", Nil, probe("d_side")(r.limit(1))),
+      View("d_both", Seq("d_left", "d_right"), probe("d_both")(
+        m.table("d_left").unionByName(m.table("d_right")))))
+    sc.setLocalProperty("graft.spec.tag", "caller")
+    val built = try m.createAll(views)
+      finally sc.setLocalProperty("graft.spec.tag", null)
+    assert(built.map(_.count()) == Seq(5L, 2L, 3L, 1L, 5L))
+    assert(views.forall(v => seen.get(v.name) == "caller"))
+    assert(m.rows("d_both") == 5L)
+    // the registry keeps declaration order whatever order views finished in
+    assert(m.dropCascade("d_root") == Seq("d_both", "d_left", "d_right", "d_root"))
+    // a dependency declared after its dependent is refused up front
+    intercept[IllegalArgumentException] {
+      m.createAll(Seq(View("x_late", Seq("x_early"), () => r),
+        View("x_early", Nil, () => r)))
+    }
+    assert(!m.exists("x_early") && !m.exists("x_late"))
+  }
+
+  test("createAll rethrows the first failure and starts no dependent " +
+      "of the failed view") {
+    import graft.matview.Materializer.View
+    val m = freshMat("dag-fail")
+    val r = graft.Tables.load(spark, SF, "region")
+    val boom = new IllegalStateException("definition failed")
+    val thrown = intercept[IllegalStateException] {
+      m.createAll(Seq(
+        View("f_ok", Nil, () => r),
+        View("f_bad", Nil, () => throw boom),
+        View("f_after", Seq("f_bad"), () => m.table("f_bad")),
+        View("f_ok_child", Seq("f_ok"), () => m.table("f_ok"))))
+    }
+    assert(thrown eq boom)
+    assert(!m.exists("f_bad") && !m.exists("f_after"))
+  }
 }
