@@ -13,215 +13,19 @@ import org.apache.spark.sql.SparkSession
   *   - each headline query materializes fully through the `noop` sink, so
   *     column pruning can't skip computing the result values the way a
   *     bare count() would;
-  *   - two timed iterations, best-of taken — matching how the reference
-  *     re-runs each EXPLAIN ANALYZE after VACUUM (steady-state number).
+  *   - repeated timed iterations, best-of and median both recorded —
+  *     matching how the reference re-runs each EXPLAIN ANALYZE after
+  *     VACUUM (steady-state number).
+  *
+  * The bench measures and reports; it does not adjudicate. Machine state
+  * rides in the record (one canary reading per scale tier, per-key
+  * cpu/disk witnesses) and drift against the quiet-box baselines is
+  * reported from the samples as measured.
   *
   * Prints exactly one JSON line:
   *   {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}
   */
 object Bench {
-
-  /** The `bracket_contended` predicate (r11 VERDICT item 3), extracted so
-    * a spec can flip it synthetically: any per-key mem-canary bracket
-    * reading — either side of any sf1/sf10 key — above 2x the quiet mem
-    * floor marks the record box-churned, even when the TIER-level
-    * canaries (which sample only a few instants) happened to read quiet. */
-  def bracketContendedFlag(brackets: Seq[(String, (Double, Double))],
-      memExpected: Double, baselinesOn: Boolean): Boolean =
-    baselinesOn && brackets.exists { case (_, (a, b)) =>
-      math.max(a, b) > 2 * memExpected
-    }
-
-  /** Which key's bracket triggers a self-adjudicating re-run (r12 VERDICT
-    * item 1) — the same >2x-floor criterion as [[bracketContendedFlag]],
-    * per key. */
-  def bracketHot(bracket: (Double, Double), memExpected: Double): Boolean =
-    math.max(bracket._1, bracket._2) > 2 * memExpected
-
-  /** The re-run adjudication kernel, extracted for specs: a CLEAN re-run
-    * bracket supplies the reported reading even when slower (it is the
-    * in-record quiet-box number); a hot re-run bracket condemns the box
-    * twice, and the record keeps whichever run read better. */
-  def rerunChoice(origBest: Double, rerunBest: Double, pre: Double,
-      post: Double, memExpected: Double): String =
-    if (!bracketHot((pre, post), memExpected) || rerunBest < origBest) "rerun"
-    else "orig"
-
-  /** One adjudicated re-run record (see [[rerunFlagged]]). */
-  final case class Rerun(key: String, origBest: Double, rerunBest: Double,
-      pre: Double, post: Double, used: String)
-
-  /** Bracket self-adjudication (r12 VERDICT item 1), the whole selection
-    * + probe + replacement pass — object-level so a spec can drive it
-    * with synthetic probe/canary functions (a quiet box never exercises
-    * the path in a real run). Any key whose mem-canary bracket read >2x
-    * the quiet floor — or (r13 VERDICT item 3) whose this-run median the
-    * caller found >1.5x its quiet baseline (`driftHot`) — is re-probed
-    * ONCE via `probe(tier.rerun, key)` bracketed by `canary()` readings;
-    * [[rerunChoice]] picks the reported samples. The drift criterion
-    * exists because r13's events_rfm drifted to 1.51x quiet under
-    * warm-NOT-hot brackets [1.60, 1.37] and escaped the bracket-only
-    * selection, leaving the round's one open reading adjudicated by a
-    * best-rep argument instead of the rig. The ORIGINAL brackets stay on
-    * record (they describe box state and feed bracket_contended); the
-    * returned [[Rerun]] rows carry the adjudication. */
-  def rerunFlagged(tier: String,
-      probed: Seq[(String, Seq[Double])],
-      brackets: Seq[(String, (Double, Double))],
-      memExpected: Double, baselinesOn: Boolean,
-      probe: (String, String) => Seq[Double],
-      canary: () => Double,
-      quiesce: () => Unit = () => (),
-      driftHot: Set[String] = Set.empty): (Seq[(String, Seq[Double])], Seq[Rerun]) = {
-    val bmap = brackets.toMap
-    val flagged = if (!baselinesOn) Nil else probed.map(_._1).filter(k =>
-      bmap.get(k).exists(bracketHot(_, memExpected)) || driftHot(k))
-    if (flagged.isEmpty) (probed, Nil)
-    else {
-      val redone = flagged.map { k =>
-        // quiesce ONLY before the pre-canary (the tier discipline: the
-        // probe's own isolate quiesces again; the post-canary reads the
-        // post-key machine state un-scrubbed, like tier boundaries)
-        quiesce()
-        val pre = canary()
-        val s = probe(s"$tier.rerun", k)
-        val post = canary()
-        k -> (s, pre, post)
-      }.toMap
-      val reruns = scala.collection.mutable.ArrayBuffer[Rerun]()
-      val adjudicated = probed.map { case (k, s) =>
-        redone.get(k) match {
-          case Some((s2, pre, post)) =>
-            val used = rerunChoice(s.min, s2.min, pre, post, memExpected)
-            reruns += Rerun(k, s.min, s2.min, pre, post, used)
-            k -> (if (used == "rerun") s2 else s)
-          case None => k -> s
-        }
-      }
-      (adjudicated, reruns.toSeq)
-    }
-  }
-
-  /** Whole-tier second pass (r15 VERDICT item 1): the per-key re-run
-    * fires while the box may STILL be churned — r14's
-    * graph_triangle_sketch re-ran at 12.8s vs 12.2 orig (both ~2.2x its
-    * quiet baseline) and the driver record kept the contaminated
-    * reading. When, AFTER per-key adjudication, any key's median still
-    * exceeds 1.5x its quiet baseline, the rig re-probes the WHOLE tier
-    * once (one quiesce, every key, fresh samples) instead of deferring
-    * the drift adjudication, and each key reports whichever of its two
-    * sample sets has the LOWER median — contention only ever inflates a
-    * reading, so min-median is the honest merge. At most one extra tier
-    * pass per bench; a quiet box never triggers it. Returns the merged
-    * tier and the keys that forced the pass (empty = no pass ran). */
-  def tierSecondPass(
-      adjudicated: Seq[(String, Seq[Double])],
-      quiet: Map[String, Double],
-      median: Seq[Double] => Double,
-      baselinesOn: Boolean,
-      probeAll: () => Seq[(String, Seq[Double])])
-      : (Seq[(String, Seq[Double])], Seq[String]) = {
-    val unresolved =
-      if (!baselinesOn) Nil
-      else adjudicated.collect { case (k, s)
-        if quiet.get(k).exists(q => median(s) > 1.5 * q) => k }
-    if (unresolved.isEmpty) (adjudicated, Nil)
-    else {
-      val second = probeAll().toMap
-      val merged = adjudicated.map { case (k, s) =>
-        k -> second.get(k).filter(s2 => median(s2) < median(s)).getOrElse(s)
-      }
-      (merged, unresolved)
-    }
-  }
-
-  /** Canary-gated tier start (r16, VERDICT item 1): for two consecutive
-    * rounds the driver's official record was the only contaminated
-    * artifact — the rig MEASURED the contention (canaries), adjudicated
-    * after the fact (per-key re-runs, whole-tier second passes), but
-    * still RAN the tiers on a box whose opening canary read >3x its
-    * quiet expectation, and sustained contention outlasted every
-    * re-probe pass (r15: text_tfidf_cosine 2.09x in the driver record
-    * vs 0.84x quiet the same day). The gate runs BEFORE the tier: when
-    * the opening canary reads hot (>2x expectation), sleep and re-probe,
-    * bounded at `maxWaits`; if the box never quiets, the tier still runs
-    * but the record self-classifies `box_unusable` with the canary
-    * evidence, instead of carrying silently inflated readings as if
-    * clean. Object-level so a spec drives it with synthetic probes; a
-    * quiet box pays nothing (hot0 false -> zero waits, zero sleeps).
-    * Returns (waits taken, still hot after the last re-probe). */
-  def canaryGate(hot0: Boolean, reprobeHot: () => Boolean,
-      baselinesOn: Boolean, maxWaits: Int, sleep: () => Unit): (Int, Boolean) =
-    if (!baselinesOn || !hot0) (0, false)
-    else {
-      var waits = 0
-      var hot = true
-      while (hot && waits < maxWaits) {
-        sleep(); waits += 1; hot = reprobeHot()
-      }
-      (waits, hot)
-    }
-
-  /** Drift-row selection kernel (r16 lift for spec coverage, closing
-    * the r15 ADVICE ordering item structurally): given a tier's
-    * (key, samples) pairs — by the emission contract these are the
-    * FULLY MERGED samples, post per-key rerun AND post tier second
-    * pass, i.e. the exact samples the queries_* maps report — keep
-    * every key whose median exceeds 1.5x its quiet baseline as
-    * (key, best, median, quiet), ordered worst-ratio first, capped at
-    * `cap` with the overflow counted. A key with no baseline does not
-    * participate. */
-  def driftRowsOf(tier: Seq[(String, Seq[Double])],
-      quiet: Map[String, Double], best: Seq[Double] => Double,
-      median: Seq[Double] => Double, cap: Int)
-      : (Seq[(String, Double, Double, Double)], Int) = {
-    val all = tier.flatMap { case (k, s) =>
-      quiet.get(k).flatMap { q =>
-        val m = median(s)
-        if (m > 1.5 * q) Some((k, best(s), m, q)) else None
-      }
-    }.sortBy { case (_, _, m, q) => -(m / q) }
-    (all.take(cap), (all.size - cap).max(0))
-  }
-
-  /** Mid-tier boundary re-gate kernel (r16, extending [[canaryGate]] to
-    * the window it cannot see: the start gate samples one instant, and
-    * churn arriving MID-tier previously ran every remaining key hot —
-    * adjudicated only after the fact). Given the boundary canary
-    * reading taken after the previous key, sleep-and-re-probe while it
-    * reads hot (>2x the quiet expectation) and budget remains; the
-    * returned reading is the state the NEXT key actually starts under.
-    * Object-level so a spec drives it with synthetic probes. Returns
-    * (reading, waits consumed). */
-  def midGate(last: Double, memExpected: Double, baselinesOn: Boolean,
-      budget: Int, canary: () => Double, sleep: () => Unit): (Double, Int) = {
-    var v = last
-    var w = 0
-    while (baselinesOn && v > 2 * memExpected && w < budget) {
-      sleep(); w += 1; v = canary()
-    }
-    (v, w)
-  }
-
-  /** Compact-line rerun budget (r13 ADVICE): the in-line `reruns` block
-    * survives every degrade level by design, but unbounded it can sink
-    * the line — on a fully churned box every probed key re-runs (13+ at
-    * sf10-full, ~60 bytes each at dp=2), pushing all three degrade
-    * levels past the ~1870-char tail budget and losing the round's
-    * parse, the exact failure the ladder exists to prevent. Keep the
-    * `cap` largest-disagreement adjudications in-line (by orig/rerun
-    * best ratio — the readings where adjudication changed the story
-    * most), count the rest; the full set is always in bench_full.json.
-    * Emission preserves the caller's (tier) order. */
-  def capReruns(reruns: Seq[(String, Rerun)], cap: Int)
-      : (Seq[(String, Rerun)], Int) =
-    if (reruns.size <= cap) (reruns, 0)
-    else {
-      val keep = reruns.sortBy { case (_, r) =>
-        -(r.origBest / math.max(r.rerunBest, 1e-9))
-      }.take(cap).map(_._1).toSet
-      (reruns.filter { case (k, _) => keep(k) }, reruns.size - cap)
-    }
 
   /** /proc/stat aggregate-cpu parse, extracted for specs (a rig bug here
     * silently corrupts every future record — the one place "beyond the
@@ -260,59 +64,26 @@ object Bench {
         .sum
     } catch { case _: Throwable => -1L }
 
-  /** Memory-bandwidth canary structure (r17, VERDICT item 1): a
-    * deterministic FULL-CYCLE permutation — Sattolo's algorithm over a
-    * SplitMix64 stream (both public algorithms) — so a pointer chase
-    * starting anywhere visits every slot before repeating. The chase is
-    * data-DEPENDENT (each load's address is the previous load's value),
-    * which is what makes it a latency probe: the CPU cannot overlap the
-    * misses, so the reading is ~hops × (DRAM + TLB miss cost) — exactly
-    * the resource the r16 box mode degraded 5× while every CPU witness
-    * (busy/steal/disk) read identical to the healthy profile and all
-    * three existing canaries (gen: CPU+write, shuffle: exchange+sort,
-    * mem: hash-agg object churn) stayed quiet. Deterministic by
-    * construction so the spec can pin the cycle property and the chase
-    * checksum. */
-  def bwCycle(slots: Int, seed: Long): Array[Int] = {
-    require(slots > 1, s"bwCycle needs > 1 slots, got $slots")
-    val a = Array.tabulate(slots)(identity)
-    var state = seed
-    def next(): Long = {
-      state += 0x9E3779B97F4A7C15L
-      var z = state
-      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
-      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
-      z ^ (z >>> 31)
-    }
-    // Sattolo: swap i with j < i (strictly) — yields a single cycle
-    var i = slots - 1
-    while (i > 0) {
-      val j = java.lang.Math.floorMod(next(), i.toLong).toInt
-      val t = a(i); a(i) = a(j); a(j) = t
-      i -= 1
-    }
-    a
-  }
+  /** One drift row: (key, best, median, quiet median). */
+  type DriftRow = (String, Double, Double, Double)
 
-  /** One thread's pointer chase over the shared cycle: `hops`
-    * data-dependent loads from `start`. Returns the fold of visited
-    * indices so the loads cannot be dead-code-eliminated. */
-  def bwChase(cycle: Array[Int], start: Int, hops: Int): Long = {
-    var cur = start
-    var acc = 0L
-    var i = 0
-    while (i < hops) { cur = cycle(cur); acc += cur; i += 1 }
-    acc
+  /** Drift-row selection kernel: given a tier's (key, samples) pairs —
+    * the samples as measured, i.e. the exact samples the queries_* maps
+    * report — keep every key whose median exceeds 1.5x its quiet baseline
+    * as (key, best, median, quiet), ordered worst-ratio first, capped at
+    * `cap` with the overflow counted. A key with no baseline does not
+    * participate. */
+  def driftRowsOf(tier: Seq[(String, Seq[Double])],
+      quiet: Map[String, Double], best: Seq[Double] => Double,
+      median: Seq[Double] => Double, cap: Int): (Seq[DriftRow], Int) = {
+    val all = tier.flatMap { case (k, s) =>
+      quiet.get(k).flatMap { q =>
+        val m = median(s)
+        if (m > 1.5 * q) Some((k, best(s), m, q)) else None
+      }
+    }.sortBy { case (_, _, m, q) => -(m / q) }
+    (all.take(cap), (all.size - cap).max(0))
   }
-
-  /** The `bw_contended` predicate, extracted for specs like its three
-    * siblings: any bandwidth-canary reading of the run — tier gates,
-    * board gate, or the graph-key bracket — above 2x the quiet
-    * expectation marks the record. Sentinel readings (< 0 — tier not
-    * reached) never flag. */
-  def bwContendedFlag(readings: Seq[Double], expected: Double,
-      baselinesOn: Boolean): Boolean =
-    baselinesOn && readings.exists(v => v > 2 * expected)
 
   /** Headline subset: one per operator family, weighted toward the
     * scale-critical paths (shuffle-heavy joins/windows, LSH dedup, ANN). */
@@ -334,20 +105,193 @@ object Bench {
     "text_bpe_train",        // driver-iterated BPE merge loop
     "events_stream_heavy_hitters") // CMS state across micro-batches
 
-  /** The three r8 probe additions, named explicitly so the r7 basis
-    * below cannot silently drift when headline is reordered or extended
-    * in a later round. */
-  private val r8Additions = Set(
-    "lookup_bucket_pruned", "text_bpe_train", "events_stream_heavy_hitters")
+  /** The sf1 tier in run order. The quiet baselines were measured in
+    * this order, so new keys are appended LAST and no existing key moves.
+    * graph_triangle_sketch runs first (r9: its rep 2 degraded 3-6x when
+    * it inherited intra-tier page-cache/local-dir state from preceding
+    * keys), then the memory-heavy dedup probes on the freshest heap. */
+  val sf1Keys: Seq[String] = Seq("graph_triangle_sketch",
+    "dedup_ngram_jaccard", "dedup_containment",
+    "dedup_simhash", "dedup_minhash_lsh", "dedup_block_ratio",
+    "dedup_span_coverage",
+    "text_tfidf_cosine",
+    "join_natural_5way", "window_cumulative", "agg_sum_group3",
+    "agg_count_distinct", "similarity_ann_lsh", "similarity_ivf",
+    "similarity_ivf_pq",
+    "text_quality", "text_repetition", "text_bm25",
+    "text_contamination", "events_funnel", "events_retention",
+    "text_line_dedup", "text_nb_classifier", "dedup_semantic",
+    "text_keywords",
+    "events_attribution", "events_rfm", "table_partition_overwrite",
+    "stat_power_analysis",
+    "agg_quantile_sketch",
+    "dedup_edit_distance",
+    "similarity_ivf_scaled", "similarity_filtered_ann",
+    "similarity_filtered_ann_conj",
+    "similarity_filtered_ann_scaled")
 
-  /** r7-and-earlier headline basis — kept so `total` stays comparable
-    * round-over-round after the r8 key additions (full file carries
-    * both sums). */
-  val headlineR7: Seq[String] = headline.filterNot(r8Additions)
+  /** The sf10 tier in run order: dedup-first like sf1 (the 60M-row tier
+    * shows position-dependent inflation on memory-heavy keys — a
+    * full-tier dedup_ngram_jaccard read 11.3s in 4th position vs 7.4s
+    * first). The default subset keeps the scaling curve in every record
+    * at bounded cost; `full` (SPARK_GRAFT_SF10=1) adds the curve keys and
+    * graph_pagerank (~200s/rep). Both append their newest keys last. */
+  def sf10Keys(full: Boolean): Seq[String] = {
+    val corpus = Seq("dedup_semantic", "text_line_dedup",
+      "text_nb_classifier", "events_attribution")
+    if (full)
+      Seq("dedup_ngram_jaccard", "dedup_minhash_lsh", "dedup_simhash") ++
+        corpus ++
+        Seq("join_natural_5way", "window_cumulative", "agg_sum_group3",
+          "similarity_ann_lsh", "text_quality", "text_contamination",
+          "events_stream_heavy_hitters", "graph_pagerank")
+    else Seq("dedup_ngram_jaccard") ++ corpus ++
+      Seq("join_natural_5way", "agg_sum_group3", "events_stream_heavy_hitters")
+  }
+
+  /** Drift rows kept per tier on the compact line's widest level. */
+  val DRIFT_CAP = 8
+
+  /** The bench record's reader keeps only a 2000-byte stdout tail
+    * (BENCH_r07/r08 "tail" is exactly 2000 chars) and sbt's ~75-byte "[success]" trailer follows
+    * the line: past this length the line's head ("metric") is cut off and
+    * the record parses null (the r7 incident). */
+  val TAIL_BUDGET = 1870
+
+  /** Everything the compact stdout line reports. `boards` are the six
+    * scoreboards in compact-line priority order, each with its decimal
+    * places; `canary` holds the measured canary values. */
+  final case class Record(
+      headline: Seq[(String, Seq[Double])],
+      sf1: Seq[(String, Seq[Double])],
+      sf10: Seq[(String, Seq[Double])],
+      drift: (Seq[DriftRow], Int),
+      driftSf10: (Seq[DriftRow], Int),
+      boardDrift: Seq[(String, Double, Double)],
+      canary: Seq[(String, Double)],
+      contended: Boolean,
+      memContended: Boolean,
+      boards: Seq[(String, Seq[(String, Double)], Int)],
+      baselinesOn: Boolean,
+      sf: String) {
+    def total: Double = headline.map(_._2.min).sum
+  }
+
+  /** Free-text values (paths from env vars) must not be able to break
+    * the record's JSON: escape the two characters that can. */
+  private def jstr(s: String): String =
+    s.replace("\\", "\\\\").replace("\"", "\\\"")
+
+  /** Trimmed floats (1.50 -> 1.5, 1.00 -> 1) buy ~60 bytes across the
+    * line's values at zero information cost. */
+  private def trim(v: Double, dp: Int): String = {
+    val s = s"%.${dp}f".format(v)
+    if (!s.contains('.')) s
+    else s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".")
+  }
+
+  private def jmapT(xs: Seq[(String, Double)], dp: Int): String =
+    xs.map { case (k, v) => "\"" + k + "\":" + trim(v, dp) }
+      .mkString("{", ",", "}")
+
+  private def bestT(xs: Seq[(String, Seq[Double])], dp: Int): String =
+    jmapT(xs.map { case (k, s) => k -> s.min }, dp)
+
+  /** The compact line at one degrade level, without the `queries` map.
+    * Levels: 0 = everything (scoreboards greedy-fit in priority order);
+    * 1 = scoreboards deferred; 2 = drift rows capped at 4; 3 = board_drift
+    * deferred, drift capped at 2, bench_full path dropped; 4 = canary
+    * values deferred (flags survive), tier maps at 1 decimal; 5 = drift
+    * capped at 1; 6 = queries_sf1 deferred; 7 = queries_sf10 deferred.
+    * Every field keeps ONE JSON type across levels: a deferred field is
+    * omitted and a boolean `*_deferred` flag marks it; everything deferred
+    * is always in bench_full. */
+  def compactAt(r: Record, level: Int): String = {
+    val driftCap =
+      if (level < 2) DRIFT_CAP else if (level < 3) 4
+      else if (level < 5) 2 else 1
+    // "omitted" rides INSIDE the drift object (query keys can't collide
+    // with it) so the object's shape is self-describing when truncated
+    def drift(d: (Seq[DriftRow], Int)): String = {
+      val kept = d._1.take(driftCap)
+      val omitted = d._2 + d._1.size - kept.size
+      (kept.map { case (k, b, m, q) =>
+        "\"" + k + s"""\":[${trim(b, 2)},${trim(m, 2)},${trim(q, 2)}]"""
+      } ++ (if (omitted > 0) Seq(s""""omitted":$omitted""") else Nil))
+        .mkString("{", ",", "}")
+    }
+    val boardDrift = r.boardDrift.map { case (k, v, q) =>
+      "\"" + k + s"""\":[${trim(v, 2)},${trim(q, 2)}]"""
+    }.mkString("{", ",", "}")
+    val d =
+      s""","drift":${drift(r.drift)},"drift_sf10":${drift(r.driftSf10)}""" +
+        (if (level < 3) s""","board_drift":$boardDrift"""
+         else ""","board_drift_deferred":true""")
+    val base = if (r.baselinesOn) "" else ""","baselines":"off""""
+    val flags = s""""contended":${r.contended},"mem_contended":${r.memContended}"""
+    val canary =
+      if (level >= 4) s"""{$flags,"values_deferred":true}"""
+      else (r.canary.map { case (k, v) => "\"" + k + "\":" + trim(v, 2) } :+
+        flags).mkString("{", ",", "}")
+    val bf = if (level < 3) ""","bench_full":"target/bench_full.json"""" else ""
+    // the flat "queries" map is the line's CONTRACT; the tier maps are
+    // detail bench_full carries at full resolution, so they defer last
+    // but before the contract field does (see compactLine)
+    val tierDp = if (level >= 4) 1 else 2
+    val sf1 = if (level >= 6) """"queries_sf1_deferred":true"""
+      else s""""queries_sf1":${bestT(r.sf1, tierDp)}"""
+    val sf10 =
+      if (r.sf10.isEmpty) ""
+      else if (level >= 7) ""","queries_sf10_deferred":true"""
+      else s""","queries_sf10":${bestT(r.sf10, tierDp)}"""
+    def assemble(boards: String) =
+      s"""{"metric":"total","value":${trim(r.total, 2)},"unit":"sec",${
+        ""}$sf1$sf10$d$base,"contention_canary":$canary$boards$bf,"sf":"${jstr(r.sf)}"}"""
+    if (level < 1) {
+      // the longest priority-ordered prefix of scoreboards that fits;
+      // each block keeps its exact name and shape, the rest are counted
+      // in boards_omitted
+      val blocks = r.boards.map { case (k, v, dp) => k -> jmapT(v, dp) }
+      val blank = assemble("").length
+      var used = 0
+      val kept = blocks.takeWhile { case (k, v) =>
+        val len = k.length + v.length + 4 // ,"k":v
+        // +22: worst-case boards_omitted suffix stays payable
+        val fits = blank + used + len + 22 <= TAIL_BUDGET
+        if (fits) used += len
+        fits
+      }
+      val omitted = blocks.size - kept.size
+      assemble(kept.map { case (k, v) => s""","$k":$v""" }.mkString +
+        (if (omitted > 0) s""","boards_omitted":$omitted""" else ""))
+    } else assemble(""","scoreboards_deferred":true""")
+  }
+
+  /** The compact stdout line: the first (level, queries-decimals) pair,
+    * level-major, whose line fits [[TAIL_BUDGET]]. The flat `queries` map
+    * (the headline sf0.1 per-key bests whose sum IS "value") is the
+    * original bench contract that the PERF comparator reads, so each
+    * level is tried with the 2dp and then the 1dp map before detail sheds
+    * another level; only a line that overflows at the slimmest level
+    * carries `queries_deferred` instead. */
+  def compactLine(r: Record): String = {
+    def splice(base: String, mid: String) = {
+      val at = base.indexOf("\"unit\":\"sec\"") + "\"unit\":\"sec\"".length
+      base.substring(0, at) + mid + base.substring(at)
+    }
+    (for {
+      level <- (0 to 7).iterator
+      base = compactAt(r, level)
+      dp <- Iterator(2, 1)
+    } yield splice(base, s""","queries":${bestT(r.headline, dp)}"""))
+      .find(_.length <= TAIL_BUDGET)
+      .getOrElse(splice(compactAt(r, 7), ""","queries_deferred":true"""))
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val nCores = Runtime.getRuntime.availableProcessors()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", nCores.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-bench")
@@ -364,25 +308,16 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def materialize(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-
     // scale-tier probe isolation: r5's in-suite sf1 numbers ran up to 4x
-    // above standalone ProfKey runs of the same key (dedup_ngram_jaccard
-    // 6.16s in-bench vs 1.40s standalone) because a memory-heavy probe
-    // inherited the heap pressure of everything measured before it —
-    // old-gen garbage plus not-yet-GC'd broadcast blocks from prior
-    // plans, paid as GC pauses inside the timed window. Before each
-    // ISOLATED probe: drop cached relations, then two explicit GCs with
-    // a beat between them so the ContextCleaner can actually unregister
-    // the newly unreachable broadcasts/shuffles before the timer starts.
-    // Isolation is scoped to the sf1/sf10 tiers, where the artifact
-    // lived: an A/B on the sf0.1 tier showed the post-full-GC heap
-    // (uncommitted regions re-faulted during the timed reps) taxes every
-    // sub-second probe ~0.1s, while the sf0.1 numbers were never
-    // pressure-inflated in the first place — so the headline tier keeps
-    // its unquiesced, round-comparable discipline.
+    // above standalone ProfKey runs of the same key because a memory-heavy
+    // probe inherited the heap pressure of everything measured before it
+    // (old-gen garbage plus not-yet-GC'd broadcast blocks, paid as GC
+    // pauses inside the timed window). Before each ISOLATED probe: drop
+    // cached relations, then two explicit GCs with a beat between them so
+    // the ContextCleaner can unregister the newly unreachable broadcasts/
+    // shuffles before the timer starts. Scoped to the sf1/sf10 tiers: on
+    // the sf0.1 tier the post-full-GC heap taxes every sub-second probe
+    // ~0.1s, and those numbers were never pressure-inflated.
     def quiesce(): Unit = {
       spark.catalog.clearCache()
       System.gc()
@@ -390,31 +325,16 @@ object Bench {
       System.gc()
     }
 
-    // the one measurement discipline behind every tier: noop-write
-    // wall-clock over `reps` samples, failures logged (a crashed query
-    // reports its crash-time sample rather than killing the bench JSON
-    // line). Both best (round-comparable steady state) and median
-    // (contention-robust) are emitted per probe: r6's driver box was
-    // under heavy external load and best-of hid how much of each number
-    // was machine noise.
     // device-level I/O-busy time (ms) summed over physical block devices
     // (/proc/diskstats field 13), read before/after each scale-tier key:
-    // busy_ms / wall_ms is the DISK UTILIZATION DURING the key — all
+    // busy_ms / wall_ms is the disk utilization DURING the key — all
     // system I/O, ours and anyone else's, which is exactly the point.
-    // r11's events_attribution read [79.2, 20.6] with CLEAN mem-canary
-    // brackets: the r12 cold-rep experiment (ProfColdRep) exonerated the
-    // page cache (a full drop costs ~0s against the 32-way scan, warm
-    // JVM), so the residual suspect is external disk-write contention
-    // during the key's own window — CPU-shaped brackets can't see it,
-    // and the tier-level shuffle canary samples the wrong instant. This
-    // reading makes the mode self-describing per key at ~zero cost.
     def ioBusyMs(): Long =
       try {
         // whole PHYSICAL devices only: /sys/block lists whole devices
-        // (never partitions — covers sda1/xvda1/nvme0n1p1/mmcblk0p2
-        // uniformly), and layered devices (dm-*/md*/loop/ram/zram) are
-        // excluded by name — their I/O re-appears on the underlying
-        // disks and would double-count the busy time
+        // (never partitions), and layered devices (dm-*/md*/loop/ram/
+        // zram) are excluded by name — their I/O re-appears on the
+        // underlying disks and would double-count the busy time
         val wholeDevs = {
           val s = java.nio.file.Files.list(java.nio.file.Paths.get("/sys/block"))
           try s.iterator().asScala.map(_.getFileName.toString)
@@ -427,16 +347,12 @@ object Bench {
           java.nio.file.Paths.get("/proc/diskstats")).asScala.toSeq, wholeDevs)
       } catch { case _: Throwable => -1L }
     val diskBusy = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // per-key CPU telemetry (r12 VERDICT item 5): /proc/stat aggregate
-    // deltas during each isolated key. busy = non-idle non-steal jiffies
-    // over total (whole-box utilization, ours and anyone else's), steal
-    // separately (hypervisor time withheld — the virtualized-contention
-    // mode nothing else here can see), plus the fraction of the box's
-    // CPU-time THIS JVM consumed (OperatingSystemMXBean.processCpuTime):
-    // a slow key with cpu_busy ~1.0 and cpu_ours well below it names
-    // external CPU load as its mode from the record alone — the witness
-    // r12's events_attribution [26.4, 91.9] readings (clean mem brackets,
-    // 4.8% disk busy) lacked.
+    // per-key CPU telemetry: /proc/stat aggregate deltas during each
+    // isolated key. busy = non-idle non-steal jiffies over total (whole-
+    // box utilization, ours and anyone else's), steal separately
+    // (hypervisor time withheld), plus the fraction of the box's CPU-time
+    // THIS JVM consumed: a slow key with cpu_busy ~1.0 and cpu_ours well
+    // below it names external CPU load as its mode from the record alone.
     def cpuStat(): (Long, Long, Long) =
       try Bench.parseCpuStat(java.nio.file.Files.readAllLines(
         java.nio.file.Paths.get("/proc/stat")).asScala.toSeq)
@@ -446,10 +362,14 @@ object Bench {
         case os: com.sun.management.OperatingSystemMXBean => os.getProcessCpuTime
         case _ => -1L
       } catch { case _: Throwable => -1L }
-    val nCores = Runtime.getRuntime.availableProcessors()
     val cpuBusy = scala.collection.mutable.LinkedHashMap[String, Double]()
     val cpuSteal = scala.collection.mutable.LinkedHashMap[String, Double]()
     val cpuOurs = scala.collection.mutable.LinkedHashMap[String, Double]()
+    // the one measurement discipline behind every tier: noop-write
+    // wall-clock over `reps` samples, failures logged (a crashed query
+    // reports its crash-time sample rather than killing the bench JSON
+    // line). Both best (round-comparable steady state) and median
+    // (contention-robust) are emitted per probe.
     def probeTier(tier: String, dir: String, names: Seq[String],
         reps: Int, isolate: Boolean = false): Seq[(String, Seq[Double])] =
       names.map { name =>
@@ -484,20 +404,15 @@ object Bench {
           cpuOurs(s"$tier.$name") = (p1 - p0) / 1e6 / (wallMs * nCores)
         }
         // rep order preserved (NOT sorted): bench_full's per-rep sample
-        // arrays are the rep-over-rep degradation evidence the r8 VERDICT
-        // asked for (driver sketch reps read 19.1 then ~33.7 — that shape
-        // is the diagnosis, and sorting would erase it)
+        // arrays are the rep-over-rep degradation evidence
         name -> samples
       }
     // shuffle-sensitive contention canary: the gen canary (sf1_gen_sec)
     // is CPU/write-bound and stayed quiet in r7 while shuffle-heavy sf10
-    // probes ran 3-5x over the quiet-box curve — whatever loads
-    // spark.local.dir / page cache is invisible to it. This probe is a
-    // fixed-size exchange + sort (constant input, no data dependence):
-    // 20M longs hashed to 1M keys, repartitioned 64-way, sorted within
-    // partitions — ~300 MB through shuffle write + fetch + sort. Median
-    // of 3 so one GC pause can't false-flag. Run adjacent to each scale
-    // tier so the flag reflects machine state DURING that tier.
+    // probes ran 3-5x over the quiet-box curve. A fixed-size exchange +
+    // sort (constant input): 20M longs hashed to 1M keys, repartitioned
+    // 64-way, sorted within partitions — ~300 MB through shuffle write +
+    // fetch + sort. Median of 3 so one GC pause can't false-flag.
     def shuffleCanarySec(): Double = {
       import org.apache.spark.sql.functions._
       val samples = (1 to 3).map { _ =>
@@ -512,20 +427,13 @@ object Bench {
       }.sorted
       samples(1)
     }
-    // memory/CPU-pressure canary — the mode the shuffle canary can't see:
-    // r8's graph_triangle_sketch read 19.1s driver-side vs 6.1s quiet-box
-    // median WITH a clean shuffle canary, so whatever inflated it lives in
-    // the hash/object-aggregate + string-hash mode, not the exchange path.
-    // This probe is a fixed-size miniature of exactly that mode: 8M longs
-    // md5-hashed (the same string-md5 kernel the sketch's bottom-k uses)
-    // into a 200k-group ObjectHashAggregate carrying TopKAgg's O(k) object
-    // state per group, under the same scoped fallback-threshold raise the
-    // sketch runs with. Constant input (pure spark.range arithmetic), so
-    // its wall-clock is a pure machine-state read. Median of 3. Rule (the
-    // r8 VERDICT's adjudication ask): when `mem_contended` is set, the
-    // memory-heavy keys' numbers that ALSO appear in the `drift` block are
-    // environment-suspect and excluded from round-over-round regression
-    // comparison — read bench_full.json's per-rep samples instead.
+    // memory/CPU-pressure canary — the mode the shuffle canary can't see
+    // (r8's graph_triangle_sketch read 3x quiet with a clean shuffle
+    // canary): a fixed-size miniature of the hash/object-aggregate +
+    // string-hash mode — 8M longs md5-hashed into a 200k-group
+    // ObjectHashAggregate carrying TopKAgg's O(k) object state per group,
+    // under the fallback-threshold raise the sketch runs with. Constant
+    // input, so its wall-clock is a pure machine-state read. Median of 3.
     def memCanarySec(): Double = {
       import org.apache.spark.sql.functions._
       val samples = (1 to 3).map { _ =>
@@ -547,39 +455,6 @@ object Bench {
       }.sorted
       samples(1)
     }
-    // memory-bandwidth/latency canary (r17, VERDICT item 1) — the mode
-    // NONE of the three probes above can see: r16's graph_pagerank sf10
-    // read 5.09x its quiet baseline with busy/steal/disk witnesses
-    // IDENTICAL to the healthy profile and gen/shuffle/mem canaries all
-    // quiet — the cycles retired, they just moved ~5x less data (host
-    // NUMA/THP state degrading random access over a multi-GB live
-    // heap). Adjudicating it needed a manual worktree control
-    // experiment; this probe lets the record self-classify instead. A
-    // 64M-slot (256 MiB — 4-8x any L3, 64k 4K-pages >> the TLB) shared
-    // cycle, chased data-dependently by 16 threads from spread starts:
-    // pure DRAM/TLB latency, no allocation in the timed window, zero
-    // Spark machinery. Median of 3. The cycle array is built ONCE and
-    // kept (building it is itself seconds of random writes); 256 MiB of
-    // stable old-gen is noise against the 16g fork heap.
-    val BW_SLOTS = 1 << 26
-    val BW_THREADS = 16
-    val BW_HOPS = 1 << 21
-    lazy val bwCycleArr: Array[Int] = Bench.bwCycle(BW_SLOTS, 42L)
-    val bwSink = new java.util.concurrent.atomic.AtomicLong
-    def bwCanarySec(): Double = {
-      val arr = bwCycleArr
-      val samples = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        val ts = (0 until BW_THREADS).map { t =>
-          val th = new Thread(() => bwSink.addAndGet(
-            Bench.bwChase(arr, t * (BW_SLOTS / BW_THREADS), BW_HOPS)))
-          th.setDaemon(true); th.start(); th
-        }
-        ts.foreach(_.join())
-        (System.nanoTime() - t0) / 1e9
-      }.sorted
-      samples(1)
-    }
 
     def bestOf(s: Seq[Double]): Double = s.min
     // true median: even-n tiers (sf1/sf10 run reps=2) average the two
@@ -593,32 +468,27 @@ object Bench {
 
     // warmup: touch codegen, parquet footers, shuffle machinery. Guarded —
     // the bench must emit its JSON line even if a query can't run.
-    try materialize("agg_sum_group3")
+    try SparkEntry.queries("agg_sum_group3")(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
     catch { case e: Throwable =>
       System.err.println(s"[bench] warmup failed: ${e.getMessage}")
     }
 
-    // ---- quiet-box baselines (externalized, r9 ADVICE) -----------------
-    // The canary expectations and per-key quiet medians were source
-    // constants for one specific 32-core box: every re-baseline was a
-    // code edit, and a foreign box systematically misreported (false
-    // drift when slower, masked drift when faster). They now live in
+    // ---- quiet-box baselines -------------------------------------------
+    // Canary expectations and per-key quiet medians live in
     // bench-baselines.properties (checked in, box fingerprint recorded);
     // SPARK_GRAFT_BASELINES=<path> points elsewhere, =off disables the
     // comparison entirely — drift blocks empty, contended flags forced
     // false, and "baselines":"off" recorded so the driver knows the
-    // adjudication surface was intentionally dark, not clean.
-    // (Loaded BEFORE the scale tiers since r13: the bracket re-run
-    // adjudication needs the quiet mem floor DURING the tiers.)
+    // comparison was intentionally dark, not clean.
     val baselinesEnv = sys.env.get("SPARK_GRAFT_BASELINES")
     val baselinesOff = baselinesEnv.exists(v =>
       Seq("off", "none", "disabled").contains(v.toLowerCase))
     // The DEFAULT checked-in file is resolved against the repo root, not
-    // the process CWD (r10 ADVICE: a bench launched from another
-    // directory silently degraded to baselines=off, forcing the
-    // contended flags false) — walk up from CWD until the file (or the
-    // .git marker) appears. An explicit SPARK_GRAFT_BASELINES=<path>
-    // stays CWD-relative as given.
+    // the process CWD (a bench launched from another directory silently
+    // degraded to baselines=off) — walk up from CWD until the file (or the
+    // .git marker) appears. An explicit SPARK_GRAFT_BASELINES=<path> stays
+    // CWD-relative as given.
     val baselinesSetting = baselinesEnv.getOrElse {
       val name = "bench-baselines.properties"
       // stop at the first .git directory: the walk must not escape the
@@ -658,8 +528,7 @@ object Bench {
           "using default"); default
       }
     }
-    def quietMedians(prefix: String): Map[String, Double] = {
-      import scala.jdk.CollectionConverters._
+    def quietMedians(prefix: String): Map[String, Double] =
       baselineProps.stringPropertyNames().asScala.toSeq
         .filter(_.startsWith(prefix))
         .flatMap { k =>
@@ -670,344 +539,54 @@ object Bench {
             None
           }
         }.toMap
-    }
     val genExpected = baseline("canary.gen_sec", 8.3)
     val shufExpected = baseline("canary.shuffle_sec", 1.8)
     val memExpected = baseline("canary.mem_sec", 1.2)
-    val bwExpected = baseline("canary.bw_sec", 1.2)
-
-    // ---- bracket self-adjudication (r12 VERDICT item 1) -----------------
-    // A key whose mem-canary bracket read >2x the quiet floor gets ONE
-    // re-run after its tier completes, with its own bracket + disk/cpu
-    // telemetry (tier label "<tier>.rerun"). A clean re-run bracket
-    // supplies the REPORTED reading (the in-record clean number two
-    // rounds of >2x driver readings lacked — r12's join_natural_5way
-    // 3.51x and agg_sum_group3 3.33x were exonerated only by off-record
-    // quiet runs); a hot re-run bracket condemns the box twice and the
-    // better of the two readings is kept, explicitly marked. The whole
-    // pass is Bench.rerunFlagged (object-level, spec-driven with
-    // synthetic probes — a quiet box never fires it in a real run); the
-    // quiesce() before each re-run's pre-canary mirrors the tiers'
-    // isolation discipline.
-    // drift-criterion selection (r13 VERDICT item 3): a key whose
-    // this-run median exceeds 1.5x its quiet baseline re-runs too — the
-    // same bar the drift BLOCK reports at, so no drift row can arrive
-    // without its rig adjudication again (r13's events_rfm did, at 1.51x
-    // median under warm-not-hot brackets)
-    def driftHotOf(tier: Seq[(String, Seq[Double])],
-        quiet: Map[String, Double]): Set[String] =
-      tier.collect { case (k, s)
-        if quiet.get(k).exists(q => medianOf(s) > 1.5 * q) => k }.toSet
-    def rerunFlagged(tier: String,
-        probed: Seq[(String, Seq[Double])],
-        brackets: Seq[(String, (Double, Double))],
-        probe: (String, String) => Seq[Double],
-        canarySec: () => Double,
-        driftHot: Set[String]): (Seq[(String, Seq[Double])], Seq[Bench.Rerun]) =
-      Bench.rerunFlagged(tier, probed, brackets, memExpected, baselinesOn,
-        probe, canarySec, () => quiesce(), driftHot)
 
     // n=3 best-of: two reps can't tell a 10% regression from noise
     val REPS = 3
     val queries = headline.filter(SparkEntry.queries.contains)
-    val results = probeTier("sf0.1", sfDir, queries, reps = 3)
-
-    // ---- canary-gated tier starts (r16, VERDICT item 1) -----------------
-    // The shared gate instance for the scale tiers and the board phase:
-    // hot = shuffle OR mem canary above 2x its quiet expectation. Each
-    // wait sleeps 120s then re-probes BOTH canaries; at most 3 waits per
-    // gate (<= 6 min), then the tier runs regardless and the record
-    // carries box_unusable. The gate's re-probed readings REPLACE the
-    // tier's opening canaries in the record — they are the box state the
-    // tier actually ran under; the pre-gate evidence rides in the gate_*
-    // fields whenever a wait happened.
-    val GATE_WAITS = 3
-    val GATE_SLEEP_MS = 120000L
-    // preBw (r17): the bandwidth canary reads AT every gate point and
-    // rides in the gate evidence — but it deliberately does NOT feed the
-    // gate's hot predicate or box_unusable. The sleep-and-reprobe ladder
-    // exists for TRANSIENT co-tenant churn (something else is using the
-    // box; waiting works — r16's mid gate recovered 2.45 -> 1.30 in one
-    // 120s wait). The bw mode is persistent host state (NUMA/THP):
-    // r16's lasted the whole day, r17 opened with it still on (~330
-    // ns/hop single-thread chase vs ~60 in-cache), and it degrades ONE
-    // key population while 40 of 42 baselined key-tiers read at/under
-    // quiet — sleeping on it burns the wait budget for nothing and
-    // box_unusable would condemn a record that is fine outside the
-    // graph tier. It self-classifies instead: `bw_contended` + the
-    // graph-key bracket + the drift row adjudicate exactly the keys the
-    // mode touches.
-    final case class Gate(waits: Int, unusable: Boolean,
-      preShuffle: Double, preMem: Double, preBw: Double)
-    def gateTier(measure: () => (Double, Double, Double))
-        : (Gate, Double, Double, Double) = {
-      var (shuf, mem, bw) = measure()
-      val (preShuf, preMem, preBw) = (shuf, mem, bw)
-      def hot = shuf > 2 * shufExpected || mem > 2 * memExpected
-      val (waits, stillHot) = Bench.canaryGate(hot,
-        () => { val m = measure(); shuf = m._1; mem = m._2; bw = m._3; hot },
-        baselinesOn, GATE_WAITS, () => Thread.sleep(GATE_SLEEP_MS))
-      if (waits > 0) System.err.println(s"[bench] canary gate: $waits " +
-        s"wait(s), shuffle $preShuf -> $shuf, mem $preMem -> $mem, " +
-        s"bw $preBw -> $bw" +
-        (if (stillHot) " — BOX UNUSABLE, tier runs flagged" else " — recovered"))
-      (Gate(waits, stillHot, preShuf, preMem, preBw), shuf, mem, bw)
-    }
-    // mid-tier boundary gate (r16, extending the start gate): the start
-    // gate samples ONE instant, and the round's close record showed
-    // churn arriving MID-tier — brackets went hot, 10 keys re-ran, 5
-    // forced a second pass. The boundary canary between keys is already
-    // measured, so it doubles as a re-gating point: when the reading
-    // before the NEXT key is hot and the tier's wait budget remains,
-    // sleep and re-probe. The re-probed value becomes the next key's
-    // PRE (the state it actually ran under); the original reading stays
-    // the previous key's POST — once a gate slept between them, the two
-    // sides of a boundary describe different instants. Bounded at
-    // GATE_WAITS sleeps per tier; a quiet tier pays nothing.
-    final class MidGate(canary: () => Double) {
-      var waits = 0
-      def gate(last: Double): Double = {
-        val (v, w) = Bench.midGate(last, memExpected, baselinesOn,
-          GATE_WAITS - waits, canary, () => Thread.sleep(GATE_SLEEP_MS))
-        if (w > 0) System.err.println(f"[bench] mid-tier gate: boundary " +
-          f"canary $last%.2f hot, $w wait(s), re-probed $v%.2f")
-        waits += w
-        v
-      }
-    }
+    val results = probeTier("sf0.1", sfDir, queries, reps = REPS)
 
     // ---- true-sf1 scale probe ------------------------------------------
     // The shuffle-heavy queries re-run at a genuinely generated sf1
     // (graft.tools.SfGen): 6M-row lineitem, 150k distinct custkeys, 50k
-    // distinct documents. Earlier rounds replicated sf0.1 x10 with shifted
-    // keys — right row count, but frozen payload cardinality (group keys,
-    // shingle vocabulary, value distributions), which flatters
-    // distinct-agg and dedup-candidate costs. The generated tier grows
-    // every cardinality with the data, so shuffle-bound behavior at real
-    // row widths is visible round-over-round.
-    val (gateSf1, shuffleCanarySf1, memCanarySf1, bwCanarySf1) =
-      gateTier(() => (shuffleCanarySec(), memCanarySec(), bwCanarySec()))
-    val midGateSf1 = new MidGate(() => memCanarySec())
-    val (sf1gen, sf1, triMemPair, sf1Brackets, sf1Reruns, sf1Tier2) = {
+    // distinct documents — every cardinality grows with the data, so
+    // shuffle-bound behavior at real row widths is visible
+    // round-over-round. Best-of-2, each key isolated: a single cold shot
+    // can't tell a real scaling cliff from a machine-load burst.
+    val shuffleCanarySf1 = shuffleCanarySec()
+    val memCanarySf1 = memCanarySec()
+    val (sf1gen, sf1) = {
       val dir = graft.matview.Materializer.defaultScratch + "/sf1"
       val g0 = System.nanoTime()
       graft.tools.SfGen.generate(spark, dir, scale = 1.0)
       val genSec = (System.nanoTime() - g0) / 1e9
-      // graph_triangle_sketch runs FIRST in the tier (r9 verdict item 3):
-      // three rounds of driver runs showed its rep-2 sample degrading
-      // 3-6x with clean canaries while every other key's rep-2 was the
-      // FAST one — an intra-tier churn mode (page-cache/local-dir state
-      // inherited from preceding keys) the canaries don't model. Running
-      // it on the freshest tier state removes the inherited component,
-      // and the memory canary BRACKETS it (pair emitted as tri_mem) so
-      // any residual divergence arrives with a before/after machine
-      // reading instead of unadjudicated.
-      quiesce()
-      val triPre = memCanarySec()
-      val tri = probeTier("sf1", dir, Seq("graph_triangle_sketch"),
-        reps = 2, isolate = true)
-      val triPost = memCanarySec()
-      // memory-heavy dedup probes next (freshest remaining heap — they
-      // were the keys hit hardest by inherited pressure; quiesce()
-      // handles the rest of the ordering sensitivity)
-      val probe = Seq("dedup_ngram_jaccard", "dedup_containment",
-        "dedup_simhash", "dedup_minhash_lsh", "dedup_block_ratio",
-        "dedup_span_coverage",
-        "text_tfidf_cosine",
-        "join_natural_5way", "window_cumulative", "agg_sum_group3",
-        "agg_count_distinct", "similarity_ann_lsh", "similarity_ivf",
-        "similarity_ivf_pq",
-        "text_quality", "text_repetition", "text_bm25",
-        "text_contamination", "events_funnel", "events_retention",
-        // r8 session-2 additions (four): the line-dedup global
-        // count/anti-join, the NB train+score pipeline, SemDeDup's
-        // cluster-scoped pair scoring, and the shared-tf-idf keyword
-        // extractor (all corpus-model shaped)
-        "text_line_dedup", "text_nb_classifier", "dedup_semantic",
-        "text_keywords",
-        // r9 probe additions (VERDICT r8 item 3): the unprobed new keys
-        "events_attribution", "events_rfm", "table_partition_overwrite",
-        "stat_power_analysis",
-        // r10 addition: the native quantile-sketch key (one corpus pass
-        // + the Ranks exact-quantile scan — both decade-sensitive)
-        "agg_quantile_sketch",
-        // r11 addition: the PassJoin edit-distance dedup (probe-explosion
-        // + segment-hash join — shuffle-volume sensitive by design)
-        "dedup_edit_distance",
-        // r15 additions, appended LAST (tier-position discipline: every
-        // existing key keeps its position and baseline): the two new ANN
-        // keys — corpus-scaled geometry and selectivity-widened filtered
-        // probe
-        "similarity_ivf_scaled", "similarity_filtered_ann",
-        // r16 addition: the conjunctive filtered probe (label AND rank
-        // window), appended last like its siblings
-        "similarity_filtered_ann_conj",
-        // r17 addition: the scaled-geometry filtered probe (the corpus-
-        // derived L with the selectivity-widened depth and the capped
-        // generate), appended last like its siblings
-        "similarity_filtered_ann_scaled")
-      // best-of-2: a single cold shot can't tell a real scaling cliff from
-      // a machine-load burst (r3's driver run reported 66s for a query
-      // that reproduces at 17s — one bad sample, n=1)
-      //
-      // EVERY sf1 key is mem-canary bracketed too (r11 VERDICT item 1:
-      // the sf10 machinery, applied to the tier it didn't cover — r11's
-      // only >2x-of-quiet reading, dedup_ngram_jaccard sf1, arrived
-      // unadjudicated precisely because this tier had no per-key
-      // brackets). The boundary canary between keys i and i+1 is key
-      // i's post AND key i+1's pre; tri's existing pre/post pair seeds
-      // the chain. ~3.5s per boundary on a quiet box.
-      val bounds = scala.collection.mutable.ArrayBuffer[Double]()
-      bounds += triPost
-      // pre-side readings: same chain, except a hot boundary may be
-      // re-gated (slept + re-probed) before the next key starts — see
-      // MidGate; the post side always keeps the un-gated reading
-      val pres = scala.collection.mutable.ArrayBuffer[Double](triPost)
-      val probed = probe.map { k =>
-        pres(pres.length - 1) = midGateSf1.gate(pres.last)
-        val r = probeTier("sf1", dir, Seq(k), reps = 2, isolate = true).head
-        val b = memCanarySec()
-        bounds += b
-        pres += b
-        r
-      }
-      val brackets =
-        ("graph_triangle_sketch", (triPre, triPost)) +:
-          probe.zipWithIndex.map { case (k, i) =>
-            (k, (pres(i), bounds(i + 1)))
-          }
-      // self-adjudication: hot-bracketed OR drift-flagged keys get one
-      // in-record re-run
-      val (adjudicated, reruns) = rerunFlagged("sf1", tri ++ probed,
-        brackets,
-        (t, k) => probeTier(t, dir, Seq(k), reps = 2, isolate = true).head._2,
-        () => memCanarySec(),
-        driftHotOf(tri ++ probed, quietMedians("sf1.")))
-      // whole-tier second pass (r15): a key the per-key re-run could not
-      // recover (median still >1.5x quiet) forces ONE full re-probe of
-      // the tier rather than a deferred drift row
-      val (merged, tier2) = Bench.tierSecondPass(adjudicated,
-        quietMedians("sf1."), medianOf, baselinesOn,
-        () => {
-          quiesce()
-          (Seq("graph_triangle_sketch") ++ probe).map(k =>
-            probeTier("sf1.pass2", dir, Seq(k), reps = 2,
-              isolate = true).head)
-        })
-      (genSec, merged, (triPre, triPost), brackets, reruns, tier2)
+      (genSec, probeTier("sf1", dir, sf1Keys, reps = 2, isolate = true))
     }
 
-    var shuffleCanarySf10 = -1.0
-    var memCanarySf10 = -1.0
-    var bwCanarySf10 = -1.0
-    // the graph-key bandwidth bracket (r17): graph_pagerank is the ONE
-    // key whose r16 5x drift only this canary's resource explains, so
-    // when the full sf10 tier runs it, the bw canary reads immediately
-    // before and after — the drift row arrives with the machine state
-    // that adjudicates it (the tri_mem pattern, pointed at the right
-    // resource)
-    var prBwPre = -1.0
-    var prBwPost = -1.0
-    var gateSf10 = Gate(0, unusable = false, -1.0, -1.0, -1.0)
-    val midGateSf10 = new MidGate(() => memCanarySec())
     // Third decade (scale=10 — 60M-row lineitem, 500k docs): the default
-    // 7-key subset (3 legacy curve keys + the 4 r8-claim keys) keeps the
-    // scaling curve in every round's driver-visible BENCH (queries_sf10)
-    // at ~2.5 min of budget (dedup_semantic ~12s x 2 reps after the r9
-    // assignUdf unboxing); SPARK_GRAFT_SF10=1 widens it to the full
-    // 13-key tier (~4 min) for the ROADMAP curve.
-    val (sf10gen, sf10, sf10Brackets, sf10Reruns, sf10Tier2) = {
-      val sf10full = sys.env.get("SPARK_GRAFT_SF10") match {
-        case Some(v) if v == "1" || v.equalsIgnoreCase("true") => true
-        case Some(v) =>
-          // a misspelled opt-in must not silently shrink the tier
-          System.err.println(s"[bench] SPARK_GRAFT_SF10='$v' not " +
-            "recognized (use 1/true); running the default sf10 subset")
-          false
-        case None => false
-      }
-      // dedup-first, like the sf1 tier: even with quiesce(), the 60M-row
-      // tier shows position-dependent inflation on memory-heavy keys
-      // (full-tier probe of dedup_ngram_jaccard read 11.3s in 4th
-      // position vs 7.4s when run first in the default subset)
-      // r9: the round-8 scale claims move into the driver-visible tier
-      // (VERDICT r8 item 2) — the N^1.5 SemDeDup bound, the two-scan line
-      // dedup, the NB train+score, and the single-join attribution all
-      // carry their sf10 numbers in BENCH rather than ROADMAP only.
-      // Memory-heavy corpus keys keep the dedup-first discipline.
-      val r9Sf10 = Seq("dedup_semantic", "text_line_dedup",
-        "text_nb_classifier", "events_attribution")
-      // r14 (r13 VERDICT item 8): the tier had no streaming or graph key
-      // with a measured decade. events_stream_heavy_hitters (~14s at
-      // sf10) joins BOTH subsets — the driver record now carries a
-      // streaming decade; graph_pagerank (~200s/rep at sf10 — 120M
-      // directed edges x 10 rounds) joins the FULL tier only, where the
-      // ROADMAP curve lives, so the driver's default bench budget is
-      // untouched. Both appended LAST: existing keys keep their tier
-      // position, so their quiet baselines stay valid.
-      val r14Sf10 = Seq("events_stream_heavy_hitters")
-      val keys =
-        if (sf10full)
-          Seq("dedup_ngram_jaccard", "dedup_minhash_lsh", "dedup_simhash") ++
-            r9Sf10 ++
-            Seq("join_natural_5way", "window_cumulative", "agg_sum_group3",
-              "similarity_ann_lsh", "text_quality", "text_contamination") ++
-            r14Sf10 ++ Seq("graph_pagerank")
-        else Seq("dedup_ngram_jaccard") ++ r9Sf10 ++
-          Seq("join_natural_5way", "agg_sum_group3") ++ r14Sf10
-      quiesce()
-      val (g10, s10, m10, b10) =
-        gateTier(() => (shuffleCanarySec(), memCanarySec(), bwCanarySec()))
-      gateSf10 = g10
-      shuffleCanarySf10 = s10
-      memCanarySf10 = m10
-      bwCanarySf10 = b10
+    // subset keeps the scaling curve in every record; SPARK_GRAFT_SF10=1
+    // widens it to the full tier for the ROADMAP curve.
+    val sf10full = sys.env.get("SPARK_GRAFT_SF10") match {
+      case Some(v) if v == "1" || v.equalsIgnoreCase("true") => true
+      case Some(v) =>
+        // a misspelled opt-in must not silently shrink the tier
+        System.err.println(s"[bench] SPARK_GRAFT_SF10='$v' not " +
+          "recognized (use 1/true); running the default sf10 subset")
+        false
+      case None => false
+    }
+    quiesce()
+    val shuffleCanarySf10 = shuffleCanarySec()
+    val memCanarySf10 = memCanarySec()
+    val (sf10gen, sf10) = {
       val dir = graft.matview.Materializer.defaultScratch + "/sf10"
       val g0 = System.nanoTime()
       graft.tools.SfGen.generate(spark, dir, scale = 10.0, files = 64)
       val genSec = (System.nanoTime() - g0) / 1e9
-      // EVERY sf10 key is mem-canary bracketed (r10 VERDICT item 1: the
-      // tri_mem pattern, generalized): the intra-tier churn mode that
-      // degraded graph_triangle_sketch's rep 2 for three rounds was
-      // DISPLACED by its tier-order fix onto text_line_dedup ([9.0,
-      // 36.7]s vs 5.46 quiet, r10) with clean TIER-level canaries —
-      // per-key [before, after] machine-state readings make any residual
-      // degradation self-adjudicating instead of unattributable. The
-      // boundary canary between two keys serves as key i's post AND key
-      // i+1's pre (~3.5s per boundary, ~30s for the default 8-key tier).
-      val bounds = scala.collection.mutable.ArrayBuffer[Double]()
-      bounds += memCanarySec()
-      // pre side may be re-gated on a hot boundary — see MidGate (sf1)
-      val pres = scala.collection.mutable.ArrayBuffer[Double](bounds.head)
-      val probed = keys.map { k =>
-        pres(pres.length - 1) = midGateSf10.gate(pres.last)
-        // bandwidth bracket around the graph key (r17): see prBwPre doc
-        if (k == "graph_pagerank") prBwPre = bwCanarySec()
-        val r = probeTier("sf10", dir, Seq(k), reps = 2, isolate = true).head
-        if (k == "graph_pagerank") prBwPost = bwCanarySec()
-        val b = memCanarySec()
-        bounds += b
-        pres += b
-        r
-      }
-      val brackets = keys.zipWithIndex.map { case (k, i) =>
-        k -> (pres(i), bounds(i + 1))
-      }
-      // self-adjudication: hot-bracketed OR drift-flagged keys get one
-      // in-record re-run
-      val (adjudicated, reruns) = rerunFlagged("sf10", probed, brackets,
-        (t, k) => probeTier(t, dir, Seq(k), reps = 2, isolate = true).head._2,
-        () => memCanarySec(),
-        driftHotOf(probed, quietMedians("sf10.")))
-      // whole-tier second pass (r15) — same rule as the sf1 tier
-      val (merged, tier2) = Bench.tierSecondPass(adjudicated,
-        quietMedians("sf10."), medianOf, baselinesOn,
-        () => {
-          quiesce()
-          keys.map(k => probeTier("sf10.pass2", dir, Seq(k), reps = 2,
-            isolate = true).head)
-        })
-      (genSec, merged, brackets, reruns, tier2)
+      (genSec, probeTier("sf10", dir, sf10Keys(sf10full), reps = 2,
+        isolate = true))
     }
 
     // physical plan node counts — the reference's secondary metric
@@ -1020,35 +599,6 @@ object Bench {
           .queryExecution.sparkPlan.collect { case p => p }.size
       } catch { case _: Throwable => -1 }
       name -> n
-    }
-
-    // board-phase bracket (r13 VERDICT item 3): r13's three mv_speedup
-    // probes drifted a uniform ~3.5x over quiet while every key-tier
-    // reading sat at/below quiet — and the record had NO telemetry during
-    // the scoreboard phase (brackets and cpu/disk witnesses cover tier
-    // keys only), so "almost certainly board-phase JVM/page-cache state"
-    // was an argument, not a reading. One mem-canary sample on each side
-    // of the whole board phase (sub-second probes; per-board brackets
-    // would cost more canary than board) makes any board_drift row
-    // arrive with a machine-state bracket alongside it. The opening side
-    // doubles as the board phase's canary gate (r16): the r13 board
-    // drift incident was box-state too, so the boards wait out a hot box
-    // exactly like the scale tiers do.
-    val (gateBoard, boardMemPre, boardBwPre) = {
-      var mem = memCanarySec()
-      var bw = bwCanarySec()
-      val (preMem, preBw) = (mem, bw)
-      // bw reads and rides in the evidence; hot keys off mem alone (the
-      // bw mode is persistent host state — see the gateTier doc)
-      def hot = mem > 2 * memExpected
-      val (waits, stillHot) = Bench.canaryGate(hot,
-        () => { mem = memCanarySec(); bw = bwCanarySec(); hot },
-        baselinesOn, GATE_WAITS,
-        () => Thread.sleep(GATE_SLEEP_MS))
-      if (waits > 0) System.err.println(s"[bench] board canary gate: " +
-        s"$waits wait(s), mem $preMem -> $mem, bw $preBw -> $bw" +
-        (if (stillHot) " — BOX UNUSABLE, boards run flagged" else " — recovered"))
-      (Gate(waits, stillHot, -1.0, preMem, preBw), mem, bw)
     }
 
     // the reference's Q4 ordering invariant at bench scale: the same
@@ -1122,20 +672,10 @@ object Bench {
         (col("id") % 97).cast("double").as("w"))
       def agg(j: DataFrame) = j.groupBy(col("k") % 7)
         .agg(count(lit(1)).as("n"), sum(col("v") * col("w")).as("s"))
-      def set(k: String, v: String): Unit = spark.conf.set(k, v)
-      // save/restore every config the triplet touches, so the 1 MB advisory
-      // partitions and skew thresholds don't leak into later measurements
-      val touched = Seq(
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.skewJoin.enabled",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor")
-      val saved = touched.map(k => k -> spark.conf.getOption(k))
-      // each variant runs under exactly its own configs (the skew thresholds
-      // apply ONLY to the aqe variant — r3 leaked the 1 MB advisory size into
-      // the salted runs), and the reps are INTERLEAVED round-robin so a
-      // machine-load burst during one wall-clock window degrades every
+      // each variant runs under exactly its own confs (the skew thresholds
+      // apply ONLY to the aqe variant — r3 leaked the 1 MB advisory size
+      // into the salted runs), and the reps are INTERLEAVED round-robin so
+      // a machine-load burst during one wall-clock window degrades every
       // variant's sample equally instead of sinking whichever variant
       // happened to run then.
       val aqeConfs = Seq(
@@ -1143,33 +683,29 @@ object Bench {
         "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1m",
         "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1m",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2")
-      val variants: Seq[(String, () => DataFrame)] = Seq(
-        "plain" -> (() => agg(skewed.join(dim, col("k") === col("dk")))),
-        "aqe_split" -> (() => agg(skewed.join(dim, col("k") === col("dk")))),
-        "salted" -> (() => agg(
-          graft.operators.SaltedJoin.saltedInner(skewed, dim, "k", "dk", 32))),
+      val variants: Seq[(String, Seq[(String, String)], () => DataFrame)] = Seq(
+        ("plain", Seq("spark.sql.adaptive.skewJoin.enabled" -> "false"),
+          () => agg(skewed.join(dim, col("k") === col("dk")))),
+        ("aqe_split", aqeConfs,
+          () => agg(skewed.join(dim, col("k") === col("dk")))),
+        ("salted", Seq("spark.sql.adaptive.skewJoin.enabled" -> "false"),
+          () => agg(graft.operators.SaltedJoin.saltedInner(
+            skewed, dim, "k", "dk", 32))),
         // salts = 0 derives the replication factor from the measured
         // hottest-key share instead of a hardcoded 32
-        "salted_auto" -> (() => agg(
-          graft.operators.SaltedJoin.saltedInner(skewed, dim, "k", "dk", 0))))
-      set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val samples: Seq[Seq[Double]] = (1 to REPS).map { _ =>
-        variants.map { case (name, mk) =>
-          if (name == "aqe_split") aqeConfs.foreach { case (k, v) => set(k, v) }
-          else {
-            aqeConfs.foreach { case (k, _) =>
-              saved.toMap.get(k).flatten
-                .fold(spark.conf.unset(k))(spark.conf.set(k, _))
+        ("salted_auto", Seq("spark.sql.adaptive.skewJoin.enabled" -> "false"),
+          () => agg(graft.operators.SaltedJoin.saltedInner(
+            skewed, dim, "k", "dk", 0))))
+      val samples = withConf(spark, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+        (1 to REPS).map { _ =>
+          variants.map { case (_, confs, mk) =>
+            withConf(spark, confs: _*) {
+              val t0 = System.nanoTime()
+              mk().write.format("noop").mode("overwrite").save()
+              (System.nanoTime() - t0) / 1e9
             }
-            set("spark.sql.adaptive.skewJoin.enabled", "false")
           }
-          val t0 = System.nanoTime()
-          mk().write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
         }
-      }
-      saved.foreach { case (k, v) =>
-        v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
       }
       variants.map(_._1).zipWithIndex.map { case (name, i) =>
         name -> samples.map(_(i)).min
@@ -1333,288 +869,137 @@ object Bench {
             col("o_custkey") === col("c_custkey"))
           .groupBy("c_nationkey")
           .agg(count(lit(1)).as("n"), sum("l_extendedprice").as("rev"))
-        val touched = Seq("spark.sql.cbo.enabled",
-          "spark.sql.cbo.joinReorder.enabled")
-        val saved = touched.map(k => k -> spark.conf.getOption(k))
-        def setCbo(on: Boolean): Unit =
-          touched.foreach(k => spark.conf.set(k, on.toString))
+        def cbo[A](on: Boolean)(f: => A): A = graft.Tables.withConf(spark,
+          "spark.sql.cbo.enabled" -> on.toString,
+          "spark.sql.cbo.joinReorder.enabled" -> on.toString)(f)
         def deepestJoinHasDim: Boolean = {
           import org.apache.spark.sql.catalyst.plans.logical.Join
           query.queryExecution.optimizedPlan
             .collect { case j: Join => j }.lastOption
             .exists(_.collectLeaves().exists(_.toString.contains("br_cust")))
         }
-        // restore in finally: a throw mid-probe (caught below as
-        // sentinels) must not leave CBO flipped for the rest of the run
-        try {
-          setCbo(true)
-          val withCbo = deepestJoinHasDim
-          setCbo(false)
-          val without = deepestJoinHasDim
-          val samples = (1 to REPS).map { _ =>
-            Seq(false, true).map { on =>
-              setCbo(on)
+        val withCbo = cbo(on = true)(deepestJoinHasDim)
+        val without = cbo(on = false)(deepestJoinHasDim)
+        val samples = (1 to REPS).map { _ =>
+          Seq(false, true).map { on =>
+            cbo(on) {
               val t0 = System.nanoTime()
               query.write.format("noop").mode("overwrite").save()
               (System.nanoTime() - t0) / 1e9
             }
           }
-          Seq("as_written_sec" -> samples.map(_(0)).min,
-            "cbo_sec" -> samples.map(_(1)).min,
-            "reordered" -> (if (withCbo && !without) 1.0 else 0.0))
-        } finally saved.foreach { case (k, v) =>
-          v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
         }
+        Seq("as_written_sec" -> samples.map(_(0)).min,
+          "cbo_sec" -> samples.map(_(1)).min,
+          "reordered" -> (if (withCbo && !without) 1.0 else 0.0))
       } catch { case e: Throwable =>
         System.err.println(s"[bench] join reorder failed: ${e.getMessage}")
         Seq("as_written_sec" -> -1.0, "cbo_sec" -> -1.0, "reordered" -> -1.0)
       }
     }
 
-    // closing side of the board-phase bracket (opened before mvTriplet)
-    val boardMemPost = memCanarySec()
-
     // ---- output ---------------------------------------------------------
-    // r7 lesson (BENCH_r07 "parsed": null): the driver keeps only a
-    // ~2.4 KB stdout TAIL, and the single JSON line had grown past it —
-    // the head (with "metric") was cut off and the round's bench record
-    // was lost. Two-channel emission now: the FULL record (medians,
-    // plan_nodes, 4-decimal precision) goes to target/bench_full.json;
-    // stdout carries one COMPACT line (best-of maps at 2 decimals, the
-    // scoreboard blocks, no medians, no plan_nodes) that stays well
-    // under the tail budget (~1.7 KB measured) even with the sf10 full
-    // tier enabled.
-    def jmap(xs: Seq[(String, Double)], dp: Int = 4): String =
-      xs.map { case (k, v) => "\"" + k + "\":" + s"%.${dp}f".format(v) }
-        .mkString("{", ",", "}")
-    // free-text values (paths from env vars) must not be able to break
-    // the record's JSON: escape the two characters that can
-    def jstr(s: String): String =
-      s.replace("\\", "\\\\").replace("\"", "\\\"")
-    val pn = planNodes.map { case (k, v) => "\"" + k + s"""\":$v""" }
-      .mkString("{", ",", "}")
-    // contention canary: SfGen is a byte-identical workload every round
-    // (pure spark.range arithmetic, fixed seed structure), so its
-    // wall-clock probes CPU/write-side machine load (r5 quiet-box 8.3s;
-    // r6's 46.0s flagged a loaded box). The shuffle canary covers the
-    // side SfGen can't see: r7's gen canary read clean while sf10
-    // shuffle-heavy probes ran 3-5x over the quiet-box curve. A flagged
-    // run means: read medians, not bests, and distrust ~2x outliers.
-    // the sf10-adjacent shuffle canary counts too: contention arising
-    // BETWEEN the tiers (the r7 incident shape) must flip the flag even
-    // when the pre-sf1 probes were quiet (-1 = tier not reached)
+    // contention canaries: SfGen is a byte-identical workload every round
+    // (pure spark.range arithmetic), so its wall-clock probes CPU/write-
+    // side machine load; the shuffle canary covers the side SfGen can't
+    // see, and the mem canary the hash-agg-heavy keys. A flagged run
+    // means: read medians, not bests, and distrust ~2x outliers.
     val contended = baselinesOn && (sf1gen > 2 * genExpected ||
       shuffleCanarySf1 > 2 * shufExpected ||
       shuffleCanarySf10 > 2 * shufExpected)
-    // memory/CPU mode flagged separately: it adjudicates the hash-agg-
-    // heavy keys (see memCanarySec) without polluting the shuffle flag
     val memContended = baselinesOn && (memCanarySf1 > 2 * memExpected ||
       memCanarySf10 > 2 * memExpected)
-    // per-key bracket readings feed a flag of their own (r11 VERDICT
-    // item 3: that round's box was visibly churned — tri_mem_post 3.4x
-    // pre, one sf10 bracket at 7x floor — yet contended/mem_contended
-    // stayed false because only the TIER-level canaries feed them; a
-    // round-over-round parser keying on the flags read a churned record
-    // as clean). Any bracket reading on either side of any key >2x the
-    // quiet mem floor flips it.
-    val bracketContended = Bench.bracketContendedFlag(
-      sf1Brackets ++ sf10Brackets, memExpected, baselinesOn)
-    // the bandwidth mode's own flag (r17, VERDICT item 1): any bw-canary
-    // reading of the run — tier gates, board gate, or the graph-key
-    // bracket — above 2x its quiet expectation. Kept separate from
-    // contended/mem_contended for the same reason those are separate:
-    // it adjudicates a different key population (the sustained-random-
-    // access workloads, graph_pagerank first among them). -1 sentinels
-    // (tier not reached / bracket not run) never flag.
-    val bwContended = Bench.bwContendedFlag(
-      Seq(bwCanarySf1, bwCanarySf10, boardBwPre, prBwPre, prBwPost),
-      bwExpected, baselinesOn)
-    // the gate's verdict (r16, VERDICT item 1): true when any gated
-    // phase was STILL hot after the bounded sleep-and-re-probe — the
-    // box never quieted, so its tier readings are self-classified
-    // unusable instead of riding as if clean. Survives every compact
-    // degrade level.
-    val boxUnusable =
-      gateSf1.unusable || gateSf10.unusable || gateBoard.unusable
-    val gateWaitsTotal = gateSf1.waits + gateSf10.waits + gateBoard.waits +
-      midGateSf1.waits + midGateSf10.waits
-    // gate evidence: [waits, still_hot, pre_shuffle, pre_mem] per gated
-    // phase (pre_* = the FIRST reading, before any wait; the recovered
-    // readings replace the tier canaries in the canary block itself),
-    // plus the mid-tier boundary-gate wait counts [sf1, sf10]
-    // gate arrays grew a 5th element in r17 (pre_bw); "mid_watch" names
-    // the surface the mid-tier boundary gate samples (r16 ADVICE: the
-    // boundary chain is the mem canary only — shuffle- or bw-only churn
-    // arriving mid-tier is adjudicated after the fact by brackets and
-    // reruns, not slept on; the note makes that asymmetry readable in
-    // the record instead of implicit)
-    def gateJson(dp: Int): String = {
-      def one(g: Gate) = s"[${g.waits},${if (g.unusable) 1 else 0}," +
-        s"${s"%.${dp}f".format(g.preShuffle)},${s"%.${dp}f".format(g.preMem)},${
-          s"%.${dp}f".format(g.preBw)}]"
-      s"""{"sf1":${one(gateSf1)},"sf10":${one(gateSf10)},"board":${
-        one(gateBoard)},"mid":[${midGateSf1.waits},${midGateSf10.waits}],"mid_watch":"mem"}"""
+    // Per-key drift surface: any scale-tier key whose this-run median
+    // exceeds 1.5x the recorded quiet-box median is carried as [best,
+    // median, quiet_median], so a reader sees environment drift per key
+    // without reading the full file. A key missing from the baselines
+    // (added later, never baselined) does not participate.
+    val drift = driftRowsOf(sf1, quietMedians("sf1."), bestOf, medianOf,
+      DRIFT_CAP)
+    val driftSf10 = driftRowsOf(sf10, quietMedians("sf10."), bestOf,
+      medianOf, DRIFT_CAP)
+    // the six scoreboards in compact-line priority order (the BASELINE.md
+    // shape-invariant boards first), with their compact decimals and
+    // whether the board is a timing (flagged > 1.5x quiet) or a quality
+    // value in [0,1] (flagged when it DROPS more than 0.05 below quiet)
+    val boards = Seq(
+      ("mv_speedup", mvTriplet, 3, true),
+      ("lookup", lookupPair, 3, true),
+      ("join_reorder", joinReorder, 2, true),
+      ("skew_join", skewTriplet, 2, true),
+      ("ann_recall", annRecall, 2, false),
+      ("triangle_sketch", triSketch, 3, false))
+    // board quiet values live under board.<block>.<key>; a missing entry
+    // doesn't participate
+    val boardDrift: Seq[(String, Double, Double)] = boards.flatMap {
+      case (block, vals, _, timing) =>
+        val quiet = quietMedians(s"board.$block.")
+        // reordered is a 0/1 plan fact, not a timing
+        vals.filter(v => block != "join_reorder" || v._1.endsWith("_sec"))
+          .flatMap { case (k, v) =>
+            quiet.get(k).flatMap { q =>
+              val flagged =
+                if (v < 0) false // crash sentinel: already visible as -1
+                else if (timing) v > 1.5 * q
+                else v < q - 0.05
+              if (flagged) Some((s"$block.$k", v, q)) else None
+            }
+          }
     }
-    def canary(dp: Int) =
-      jmap(Seq("sf1_gen_sec" -> sf1gen, "sf10_gen_sec" -> sf10gen,
-        "expected_sec" -> genExpected,
+    val record = Record(results, sf1, sf10, drift, driftSf10, boardDrift,
+      Seq("sf1_gen_sec" -> sf1gen, "sf10_gen_sec" -> sf10gen,
         "shuffle_sec" -> shuffleCanarySf1,
-        "shuffle_expected_sec" -> shufExpected,
         "shuffle_sf10_sec" -> shuffleCanarySf10,
-        "mem_sec" -> memCanarySf1,
-        "mem_expected_sec" -> memExpected,
-        "mem_sf10_sec" -> memCanarySf10,
-        // the graph_triangle_sketch bracketing pair (r9 verdict item 3):
-        // the memory canary run immediately before and after that key's
-        // reps — a residual rep-2 degradation now arrives with a
-        // machine-state reading on each side
-        "tri_mem_pre_sec" -> triMemPair._1,
-        "tri_mem_post_sec" -> triMemPair._2,
-        // the scoreboard-phase pair (r13 VERDICT item 3): a board_drift
-        // row now arrives with machine state read on each side of the
-        // whole board phase
-        "board_mem_pre_sec" -> boardMemPre,
-        "board_mem_post_sec" -> boardMemPost,
-        // the bandwidth canary (r17, VERDICT item 1): tier-gate
-        // readings, the board-gate reading, and the graph-key bracket
-        // (-1 when the full sf10 tier didn't run)
-        "bw_sec" -> bwCanarySf1,
-        "bw_sf10_sec" -> bwCanarySf10,
-        "bw_expected_sec" -> bwExpected,
-        "bw_board_sec" -> boardBwPre,
-        "pr_bw_pre_sec" -> prBwPre,
-        "pr_bw_post_sec" -> prBwPost), dp)
-        .dropRight(1) +
-        s""","contended":$contended,"mem_contended":$memContended,"bracket_contended":$bracketContended,"bw_contended":$bwContended,"box_unusable":$boxUnusable}"""
-    // Per-key drift surface (r8 VERDICT item 4, r9 item 1): any scale-
-    // tier key whose THIS-RUN median exceeds 1.5x the recorded quiet-box
-    // median is carried in the compact line as [best, median,
-    // quiet_median] — the driver sees environment drift per key without
-    // reading the full file. r9 extended lessons: the cap rose 3 -> 8
-    // (cap-3 silently hid window_cumulative's entry) with an explicit
-    // omitted-count when even 8 truncates, and the surface now covers
-    // the sf10 tier too ("drift_sf10") — r9's largest divergence
-    // (events_attribution, 6.4x at median) was in the sf10 tier and
-    // arrived unadjudicated because only sf1 was surfaced. Quiet medians
-    // live in bench-baselines.properties; a key missing there (added
-    // later, never baselined) just doesn't participate.
-    val DRIFT_CAP = 8
-    def driftRowsFor(tier: Seq[(String, Seq[Double])],
-        quiet: Map[String, Double]): (Seq[(String, Double, Double, Double)], Int) =
-      Bench.driftRowsOf(tier, quiet, bestOf, medianOf, DRIFT_CAP)
-    // Ordering contract (r15 ADVICE): these drift rows are computed on
-    // the FULLY MERGED tiers — after the per-key rerun adjudication AND
-    // after any whole-tier second pass (sf1/sf10 here are tierSecondPass
-    // output) — so a drift row always describes the same samples the
-    // queries_sf1/queries_sf10 maps report, never a pre-merge reading.
-    // The `reruns` rows' orig/rerun bests, by contrast, predate the
-    // second pass by construction (they record the PER-KEY adjudication
-    // step): when tier_second_pass lists keys, read the drift block and
-    // the queries maps as current, the rerun rows as that step's log.
-    val (driftRows, driftOmitted) = driftRowsFor(sf1, quietMedians("sf1."))
-    val (driftRowsSf10, driftOmittedSf10) =
-      driftRowsFor(sf10, quietMedians("sf10."))
-    // Scoreboard quiet baselines (r10 VERDICT item 2): the skew/mv/
-    // lookup/join-reorder/recall blocks had NO baselines, so r10's
-    // salted-join inversion (salted 4.64 vs plain 2.74, flipping the
-    // r8/r9 ordering with untouched code) arrived unadjudicated. Same
-    // >1.5x rule as the per-key drift for the timing boards; the quality
-    // boards (recalls/ratios, in [0,1]) flag when they DROP more than
-    // 0.05 below quiet. Values live under board.<block>.<key> in
-    // bench-baselines.properties; a missing entry doesn't participate.
-    val boardDrift: Seq[(String, Double, Double)] = Seq(
-      ("mv_speedup", mvTriplet, true),
-      ("skew_join", skewTriplet, true),
-      ("lookup", lookupPair, true),
-      // reordered is a 0/1 plan fact, not a timing
-      ("join_reorder", joinReorder.filter(_._1.endsWith("_sec")), true),
-      ("ann_recall", annRecall, false),
-      ("triangle_sketch", triSketch, false)
-    ).flatMap { case (block, vals, timing) =>
-      val quiet = quietMedians(s"board.$block.")
-      vals.flatMap { case (k, v) =>
-        quiet.get(k).flatMap { q =>
-          val flagged =
-            if (v < 0) false // crash sentinel: already visible as -1
-            else if (timing) v > 1.5 * q
-            else v < q - 0.05
-          if (flagged) Some((s"$block.$k", v, q)) else None
-        }
-      }
-    }
-    val boardDriftJson = boardDrift.map { case (k, v, q) =>
-      "\"" + k + f"""\":[$v%.2f,$q%.2f]"""
-    }.mkString("{", ",", "}")
-    // "omitted" rides INSIDE the drift object (query keys can't collide
-    // with it) so the object's shape is self-describing when truncated
-    def driftJsonOf(rows: Seq[(String, Double, Double, Double)],
-        omitted: Int): String =
-      (rows.map { case (k, b, m, q) =>
-        "\"" + k + f"""\":[$b%.2f,$m%.2f,$q%.2f]"""
-      } ++ (if (omitted > 0) Seq(s""""omitted":$omitted""") else Nil))
+        "mem_sec" -> memCanarySf1, "mem_sf10_sec" -> memCanarySf10),
+      contended, memContended, boards.map(b => (b._1, b._2, b._3)),
+      baselinesOn, sfDir)
+
+    // Two-channel emission (r7: only a ~2 KB stdout tail of the run is
+    // kept): the FULL record (medians, per-rep samples, telemetry,
+    // plan_nodes, 4-decimal precision) goes to target/bench_full.json;
+    // stdout carries the compact line.
+    def jmap(xs: Seq[(String, Double)]): String =
+      xs.map { case (k, v) => "\"" + k + "\":" + f"$v%.4f" }
         .mkString("{", ",", "}")
-    val driftJson = driftJsonOf(driftRows, driftOmitted)
-    val driftJsonSf10 = driftJsonOf(driftRowsSf10, driftOmittedSf10)
-    val total = results.map { case (_, s) => bestOf(s) }.sum
-    val totalR7 = results.filter(r => headlineR7.contains(r._1))
-      .map { case (_, s) => bestOf(s) }.sum
-    val mv = jmap(mvTriplet)
-    val sk = jmap(skewTriplet)
-    val ar = jmap(annRecall)
-    val tsk = jmap(triSketch)
-    val lk = jmap(lookupPair)
-    val jr = jmap(joinReorder)
     // per-rep sample arrays, REP ORDER (not sorted): degradation within a
-    // key's own reps is the memory-mode signature the canary adjudicates
+    // key's own reps is the memory-mode signature
     def samplesMap(xs: Seq[(String, Seq[Double])]): String =
       xs.map { case (k, s) =>
         "\"" + k + "\":[" + s.map(v => f"$v%.4f").mkString(",") + "]"
       }.mkString("{", ",", "}")
-    def bracketsJson(bs: Seq[(String, (Double, Double))], dp: Int): String =
-      bs.map { case (k, (a, b)) =>
-        "\"" + k + s"""\":[${s"%.${dp}f".format(a)},${
-          s"%.${dp}f".format(b)}]"""
-      }.mkString("{", ",", "}")
-    // the self-adjudication record: [orig_best, rerun_best, rerun_pre,
-    // rerun_post, used(1=rerun)] per re-run key, tier-prefixed. Empty on
-    // a box whose brackets stayed under 2x floor.
-    val allReruns = sf1Reruns.map(r => (s"sf1.${r.key}", r)) ++
-      sf10Reruns.map(r => (s"sf10.${r.key}", r))
-    def rerunsJsonOf(rs: Seq[(String, Bench.Rerun)], omitted: Int,
-        dp: Int): String =
-      (rs.map { case (k, r) =>
-        def f(v: Double) = s"%.${dp}f".format(v)
-        "\"" + k + s"""\":[${f(r.origBest)},${f(r.rerunBest)},${f(r.pre)},${
-          f(r.post)},${if (r.used == "rerun") 1 else 0}]"""
-      } ++ (if (omitted > 0) Seq(s""""omitted":$omitted""") else Nil))
+    def tierJson(name: String, xs: Seq[(String, Seq[Double])]): String =
+      s""""$name":${jmap(xs.map { case (k, s) => k -> bestOf(s) })},"${
+        name}_median":${jmap(xs.map { case (k, s) => k -> medianOf(s) })}"""
+    def driftJson(d: (Seq[DriftRow], Int)): String =
+      (d._1.map { case (k, b, m, q) =>
+        "\"" + k + f"""\":[$b%.2f,$m%.2f,$q%.2f]"""
+      } ++ (if (d._2 > 0) Seq(s""""omitted":${d._2}""") else Nil))
         .mkString("{", ",", "}")
-    // the compact line keeps the RERUN_CAP largest-disagreement rows
-    // (r13 ADVICE: unbounded, a fully churned box pushes every degrade
-    // level past the tail budget); "omitted" rides inside the object
-    // like the drift blocks', and bench_full always carries the full set
-    val RERUN_CAP = 6
-    val (rerunsInline, rerunsOmitted) = Bench.capReruns(allReruns, RERUN_CAP)
+    val boardDriftJson = boardDrift.map { case (k, v, q) =>
+      "\"" + k + f"""\":[$v%.2f,$q%.2f]"""
+    }.mkString("{", ",", "}")
+    val canaryJson = jmap(Seq("sf1_gen_sec" -> sf1gen,
+      "sf10_gen_sec" -> sf10gen, "expected_sec" -> genExpected,
+      "shuffle_sec" -> shuffleCanarySf1,
+      "shuffle_expected_sec" -> shufExpected,
+      "shuffle_sf10_sec" -> shuffleCanarySf10,
+      "mem_sec" -> memCanarySf1, "mem_expected_sec" -> memExpected,
+      "mem_sf10_sec" -> memCanarySf10)).dropRight(1) +
+      s""","contended":$contended,"mem_contended":$memContended}"""
+    val pn = planNodes.map { case (k, v) => "\"" + k + s"""\":$v""" }
+      .mkString("{", ",", "}")
     val s10full = if (sf10.isEmpty) "" else
-      ""","queries_sf10":""" +
-        jmap(sf10.map { case (k, s) => k -> bestOf(s) }) +
-      ""","queries_sf10_median":""" +
-        jmap(sf10.map { case (k, s) => k -> medianOf(s) }) +
-      ""","queries_sf10_samples":""" + samplesMap(sf10) +
-      ""","sf10_brackets":""" + bracketsJson(sf10Brackets, 4)
+      "," + tierJson("queries_sf10", sf10) +
+        ""","queries_sf10_samples":""" + samplesMap(sf10)
     val fullJson =
-      f"""{"metric":"total","value":$total%.4f,"unit":"sec","total_r7_basis":$totalR7%.4f,"queries":${
-        jmap(results.map { case (k, s) => k -> bestOf(s) })},"queries_median":${
-        jmap(results.map { case (k, s) => k -> medianOf(s) })},"queries_sf1":${
-        jmap(sf1.map { case (k, s) => k -> bestOf(s) })},"queries_sf1_median":${
-        jmap(sf1.map { case (k, s) => k -> medianOf(s) })},"queries_sf1_samples":${
-        samplesMap(sf1)},"sf1_brackets":${bracketsJson(sf1Brackets, 4)}$s10full,"tier_second_pass":{"sf1":${
-        sf1Tier2.map("\"" + _ + "\"").mkString("[", ",", "]")},"sf10":${
-        sf10Tier2.map("\"" + _ + "\"").mkString("[", ",", "]")}},"disk_busy":${
-        jmap(diskBusy.toSeq)},"cpu_busy":${jmap(cpuBusy.toSeq)},"cpu_steal":${
-        jmap(cpuSteal.toSeq)},"cpu_ours":${jmap(cpuOurs.toSeq)},"reruns":${
-        rerunsJsonOf(allReruns, 0, 4)},"canary_gate":${gateJson(4)},"drift":$driftJson,"drift_sf10":$driftJsonSf10,"board_drift":$boardDriftJson,"baselines":"${
-        if (baselinesOn) jstr(baselinesSetting) else "off"}","sf1_gen_sec":$sf1gen%.4f,"sf10_gen_sec":$sf10gen%.4f,"contention_canary":${
-        canary(4)},"plan_nodes":$pn,"mv_speedup":$mv,"skew_join":$sk,"ann_recall":$ar,"triangle_sketch":$tsk,"lookup":$lk,"join_reorder":$jr,"sf":"${jstr(sfDir)}"}"""
+      f"""{"metric":"total","value":${record.total}%.4f,"unit":"sec",${
+        tierJson("queries", results)},${tierJson("queries_sf1", sf1)},"queries_sf1_samples":${
+        samplesMap(sf1)}$s10full,"disk_busy":${jmap(diskBusy.toSeq)},"cpu_busy":${
+        jmap(cpuBusy.toSeq)},"cpu_steal":${jmap(cpuSteal.toSeq)},"cpu_ours":${
+        jmap(cpuOurs.toSeq)},"drift":${driftJson(drift)},"drift_sf10":${
+        driftJson(driftSf10)},"board_drift":$boardDriftJson,"baselines":"${
+        if (baselinesOn) jstr(baselinesSetting) else "off"}","sf1_gen_sec":$sf1gen%.4f,"sf10_gen_sec":$sf10gen%.4f,"contention_canary":$canaryJson,"plan_nodes":$pn${
+        boards.map { case (k, v, _, _) => s""","$k":${jmap(v)}""" }.mkString},"sf":"${jstr(sfDir)}"}"""
     val fullPath = java.nio.file.Paths.get("target/bench_full.json")
     try {
       java.nio.file.Files.createDirectories(fullPath.getParent)
@@ -1625,222 +1010,8 @@ object Bench {
       // the file is best-effort; the compact stdout line is the contract
       System.err.println(s"[bench] could not write $fullPath: ${e.getMessage}")
     }
-    // ---- compact stdout line -------------------------------------------
-    // The driver keeps only a 2000-byte stdout TAIL (measured: BENCH_r07/
-    // r08 "tail" is exactly 2000 chars), and sbt's "[success] Total time"
-    // trailer (~75 bytes) follows the line — so the line must stay under
-    // ~1850 bytes or its HEAD (with "metric") falls off and the round's
-    // bench record parses null (the r7 incident). With the r9 tier
-    // additions that budget no longer fits the sf0.1 per-key map, so the
-    // compact line carries the SCALE tiers (sf1/sf10 — the driver-graded
-    // story), the scoreboard blocks (BASELINE.md shape invariants), the
-    // canaries, the drift block, and the headline totals; the sf0.1
-    // per-key map (fixed-cost dominated, stable since r5) lives in
-    // bench_full.json alongside medians, samples and plan_nodes.
-    // Trimmed floats (1.50 -> 1.5, 1.00 -> 1) buy ~60 bytes across the
-    // ~70 values at zero information cost.
-    def trim(v: Double, dp: Int): String = {
-      val s = s"%.${dp}f".format(v)
-      if (!s.contains('.')) s
-      else s.reverse.dropWhile(_ == '0').reverse.stripSuffix(".")
-    }
-    def jmapT(xs: Seq[(String, Double)], dp: Int): String =
-      xs.map { case (k, v) => "\"" + k + "\":" + trim(v, dp) }
-        .mkString("{", ",", "}")
-    def bestT(xs: Seq[(String, Seq[Double])], dp: Int = 2): String =
-      jmapT(xs.map { case (k, s) => k -> bestOf(s) }, dp)
-    def driftT(rows: Seq[(String, Double, Double, Double)],
-        omitted: Int): String =
-      (rows.map { case (k, b, m, q) =>
-        "\"" + k + s"""\":[${trim(b, 2)},${trim(m, 2)},${trim(q, 2)}]"""
-      } ++ (if (omitted > 0) Seq(s""""omitted":$omitted""") else Nil))
-        .mkString("{", ",", "}")
-    // compact canary: measured values + flags only — the expected
-    // constants are static (bench-baselines.properties and bench_full),
-    // not round data. tri_mem is the sketch-bracketing pair (see
-    // canary(dp)). The SLIM form (last degrade level) drops the four
-    // phase-bracket pairs too — they are in bench_full, and at the r16
-    // tier width the full canary block alone pushed the last level 15B
-    // past the tail budget (the first budget overrun since r7).
-    def canaryCompact(slim: Boolean): String = {
-      val fields = Seq("sf1_gen_sec" -> sf1gen,
-        "sf10_gen_sec" -> sf10gen, "shuffle_sec" -> shuffleCanarySf1,
-        "shuffle_sf10_sec" -> shuffleCanarySf10, "mem_sec" -> memCanarySf1,
-        "mem_sf10_sec" -> memCanarySf10, "bw_sec" -> bwCanarySf1,
-        "bw_sf10_sec" -> bwCanarySf10) ++
-        (if (slim) Nil else Seq("tri_mem_pre" -> triMemPair._1,
-          "tri_mem_post" -> triMemPair._2, "board_mem_pre" -> boardMemPre,
-          "board_mem_post" -> boardMemPost, "pr_bw_pre" -> prBwPre,
-          "pr_bw_post" -> prBwPost))
-      jmapT(fields, 2).dropRight(1) +
-        s""","contended":$contended,"mem_contended":$memContended,"bracket_contended":$bracketContended,"bw_contended":$bwContended,"box_unusable":$boxUnusable}""" +
-        // gate detail rides next to the canary block only when the gate
-        // actually did something (~0 bytes on a quiet box)
-        (if (gateWaitsTotal > 0 || boxUnusable)
-          s""","canary_gate":${gateJson(2)}""" else "")
-    }
-    def s10compact(dp: Int) = if (sf10.isEmpty) "" else
-      ""","queries_sf10":""" + bestT(sf10, dp)
-    // degrade levels: 0 = everything; 1 = scoreboard blocks deferred to
-    // the full file; 2 = drift detail deferred too (metric/tiers/canary
-    // always survive — a future tier growth can cost detail, never the
-    // round's parse). Every field keeps ONE JSON type across levels
-    // (r9 ADVICE: the old levels substituted a string where an object
-    // was, breaking typed round-over-round parsers): deferred fields are
-    // OMITTED and a boolean *_deferred flag marks why. The sf0.1 per-key
-    // map lives only in bench_full (no sentinel field pretending
-    // otherwise); everything deferred is always in bench_full too.
-    // compact line carries only the bracket pairs that ADJUDICATE
-    // something (post-canary hot relative to pre, or absolutely hot
-    // against the quiet expectation) — the full per-key pairs are in
-    // bench_full. Quiet run => empty object, ~20 bytes.
-    def flaggedOf(bs: Seq[(String, (Double, Double))]): String =
-      bs.filter { case (_, (a, b)) =>
-        b > 1.5 * a || (baselinesOn && b > 2 * memExpected)
-      }.map { case (k, (a, b)) =>
-        "\"" + k + s"""\":[${trim(a, 2)},${trim(b, 2)}]"""
-      }.mkString("{", ",", "}")
-    val flaggedBracketsT = flaggedOf(sf10Brackets)
-    val flaggedBracketsSf1T = flaggedOf(sf1Brackets)
-    val boardDriftT = boardDrift.map { case (k, v, q) =>
-      "\"" + k + s"""\":[${trim(v, 2)},${trim(q, 2)}]"""
-    }.mkString("{", ",", "}")
-    def compactLine(level: Int) = {
-      // degrade order (r16, VERDICT item 2 — correcting r15's byte
-      // budget, which dropped the drift blocks while keeping 6 rerun
-      // rows): DRIFT ROWS OUTRANK RERUN ROWS. The drift blocks are the
-      // signal the judge needs most under contention — which keys read
-      // hot, by how much, against which quiet baseline — so drift and
-      // drift_sf10 survive EVERY degrade level (row caps shrink, with
-      // the "omitted" count keeping the object self-describing), while
-      // the rerun/bracket DETAIL defers at level 2 (a *_deferred flag +
-      // the rerun count; the full sets are always in bench_full).
-      // Level order: 1 = scoreboards defer; 2 = rerun + bracket detail
-      // defer, drift caps at 4; 3 = board_drift defers too, drift caps
-      // at 2; 4 = canary VALUES defer (flags always survive) — drift
-      // itself never defers.
-      val driftCap =
-        if (level < 2) DRIFT_CAP else if (level < 3) 4
-        else if (level < 5) 2 else 1
-      def capDrift(rows: Seq[(String, Double, Double, Double)],
-          omitted: Int): String = {
-        val kept = rows.take(driftCap)
-        driftT(kept, omitted + rows.size - kept.size)
-      }
-      val d =
-        s""","drift":${capDrift(driftRows, driftOmitted)},"drift_sf10":${
-          capDrift(driftRowsSf10, driftOmittedSf10)}""" +
-        (if (level < 3) s""","board_drift":$boardDriftT"""
-         else ""","board_drift_deferred":true""") +
-        (if (level < 2)
-          s""","sf1_brackets":$flaggedBracketsSf1T,"sf10_brackets":$flaggedBracketsT"""
-         else ""","brackets_deferred":true""")
-      val rr = if (level < 2)
-        s""","reruns":${rerunsJsonOf(rerunsInline, rerunsOmitted, 2)}"""
-      else s""","reruns_deferred":true,"reruns_n":${allReruns.size}"""
-      val base = if (baselinesOn) "" else ""","baselines":"off""""
-      // tier2 counts survive every level (the fact that a whole-tier
-      // second pass ran is adjudication, not detail); ~0 bytes on a
-      // quiet box
-      val t2 = (if (sf1Tier2.nonEmpty)
-        s""","tier2_sf1":${sf1Tier2.size}""" else "") +
-        (if (sf10Tier2.nonEmpty)
-          s""","tier2_sf10":${sf10Tier2.size}""" else "")
-      // last level: slim canary, and the static bench_full path goes too
-      // (fixed string, nothing lost) — the tier maps themselves never shed
-      // level 4 (r17): the canary VALUES defer too — the round's close
-      // run showed the widened tier maps (a 36-char key name joined the
-      // always-surviving queries_sf1) plus the bw fields pushing even
-      // level 3 to 1936B, the first every-level overflow since r7. The
-      // FLAGS always survive (they are the adjudication verdicts); the
-      // readings live in bench_full like every other deferred detail.
-      val canaryT =
-        if (level >= 4)
-          s"""{"contended":$contended,"mem_contended":$memContended,"bracket_contended":$bracketContended,"bw_contended":$bwContended,"box_unusable":$boxUnusable,"values_deferred":true}"""
-        else canaryCompact(slim = level >= 3)
-      val bf = if (level < 3)
-        ""","bench_full":"target/bench_full.json"""" else ""
-      // level 4 also trims the tier maps to 1 decimal — trading sub-100ms
-      // resolution (bench_full keeps 4dp) for ~50B of headroom, so a
-      // drift-heavy run still parses.
-      // levels 6/7 (r18): the tier maps THEMSELVES defer — sf1 (the
-      // largest block, ~880B at the r18 width) at 6, sf10 too at 7 —
-      // with typed flags. Rationale: the flat "queries" map is the
-      // driver CONTRACT ({"metric","value","unit","queries",...}) and
-      // its comparator reads per_query from it, while the tier maps are
-      // judge detail that bench_full carries at full resolution; at the
-      // r18 tier width (50 keys, ~1.3KB at 1dp) the two maps together
-      // could crowd the contract field out of EVERY level, which is
-      // backwards. The joint (level, dp) search below prefers keeping
-      // the tiers whenever they fit.
-      val tierDp = if (level >= 4) 1 else 2
-      val sf1T = if (level >= 6) """"queries_sf1_deferred":true"""
-        else s""""queries_sf1":${bestT(sf1, tierDp)}"""
-      val sf10T = if (level >= 7 && sf10.nonEmpty)
-        ""","queries_sf10_deferred":true""" else s10compact(tierDp)
-      def assemble(boards: String) =
-        f"""{"metric":"total","value":${trim(total, 2)},"unit":"sec",${
-          ""}$sf1T$sf10T$d$base$rr$t2,"contention_canary":$canaryT$boards$bf,"sf":"${jstr(sfDir)}"}"""
-      if (level < 1) {
-        // greedy-fit scoreboards (r15): the full 6-block set costs ~390
-        // bytes and the widened tiers pushed level 0 past the tail
-        // budget, deferring ALL boards (r14's scoreboards_deferred).
-        // Emit instead the longest priority-ordered prefix that fits —
-        // the BASELINE.md shape-invariant boards first (the MV ladder,
-        // the pruned lookup, the CBO re-plan) — and count the rest in
-        // boards_omitted. Each block keeps its exact name and shape, so
-        // a round-over-round parser sees either the block or the count,
-        // never a retyped field; bench_full always carries all six.
-        val blocks = Seq(
-          "mv_speedup" -> jmapT(mvTriplet, 3),
-          "lookup" -> jmapT(lookupPair, 3),
-          "join_reorder" -> jmapT(joinReorder, 2),
-          "skew_join" -> jmapT(skewTriplet, 2),
-          "ann_recall" -> jmapT(annRecall, 2),
-          "triangle_sketch" -> jmapT(triSketch, 3))
-        val blank = assemble("").length
-        var used = 0
-        val kept = blocks.takeWhile { case (k, v) =>
-          val len = k.length + v.length + 4 // ,"k":v
-          // +22: worst-case boards_omitted suffix stays payable
-          val fits = blank + used + len + 22 <= 1870
-          if (fits) used += len
-          fits
-        }
-        val omitted = blocks.size - kept.size
-        assemble(kept.map { case (k, v) => s""","$k":$v""" }.mkString +
-          (if (omitted > 0) s""","boards_omitted":$omitted""" else ""))
-      } else assemble(""","scoreboards_deferred":true""")
-    }
-    // flat "queries" map (r17 VERDICT item 2): the original bench
-    // contract — {"metric","value","unit","queries",...} — whose
-    // per-key entries the driver's PERF comparator reads; the tier
-    // maps alone left per_query/scaling empty two rounds running. It
-    // is the headline sf0.1 per-key map (the keys whose best-of sum IS
-    // "value"). The r18 round-close run showed the first splice design
-    // (pick the degrade level, THEN fit queries into the leftover)
-    // deferring the map on a churned full-tier line: the optional
-    // detail blocks out-competed a CONTRACT field. Since every
-    // deferrable block is in bench_full anyway, the ladder search now
-    // runs over (level, queries-dp) jointly — each level is tried with
-    // the 2dp then 1dp map before detail sheds another level — so the
-    // queries map outranks rerun/bracket/board/canary-value detail and
-    // only a line that overflows at the slimmest level WITHOUT the map
-    // carries the typed queries_deferred flag (the 4dp map is always
-    // in bench_full).
-    def spliceQueries(base: String, mid: String) = {
-      val at = base.indexOf("\"unit\":\"sec\"") + "\"unit\":\"sec\"".length
-      base.substring(0, at) + mid + base.substring(at)
-    }
-    val out = (for {
-      level <- (0 to 7).iterator
-      base = compactLine(level)
-      dp <- Seq(2, 1).iterator
-    } yield spliceQueries(base, s""","queries":${bestT(results, dp)}"""))
-      .find(_.length <= 1870)
-      .getOrElse(
-        spliceQueries(compactLine(7), ""","queries_deferred":true"""))
-    if (out.length > 1870)
+    val out = compactLine(record)
+    if (out.length > TAIL_BUDGET)
       System.err.println(s"[bench] compact line ${out.length}B exceeds the " +
         "tail budget at every degrade level — driver parse at risk")
     println(out)

@@ -37,14 +37,18 @@ object Tables {
     * `events.ts` has shipped as parquet TIMESTAMP(NANOS) in some fixture
     * generations and TIMESTAMP(MICROS) in others, so the shim dispatches on
     * the actual read schema via [[normalizeTs]] instead of assuming one.
-    * `nanosAsLong` is set unconditionally: it only affects NANOS files
-    * (which the vectorized reader otherwise rejects) and is a no-op for
-    * MICROS files.
+    * A NANOS file needs `nanosAsLong` (the reader otherwise rejects it),
+    * and the scan reads that conf when it EXECUTES, after this returns,
+    * so it cannot be scoped: it is set on the session, but only when the
+    * footer shows NANOS (or cannot be read) — a MICROS file leaves the
+    * caller's session untouched.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      normalizeTs(spark.read.parquet(s"$dir/$name.parquet"))
+      val path = s"$dir/$name.parquet"
+      if (graft.matview.Footers.hasNanosTimestamp(spark, path).getOrElse(true))
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      normalizeTs(spark.read.parquet(path))
     } else {
       spark.read.parquet(s"$dir/$name.parquet")
     }
@@ -125,10 +129,14 @@ object Tables {
     * affects plans that PLAN AND EXECUTE inside the scope — callers must
     * eagerly materialize (localCheckpoint / write) within `f`; a lazy
     * DataFrame returned out of the scope plans under the restored confs.
-    * (Same contract as Lifecycle.withAutoBucketedScanDisabled, generic.) */
+    *
+    * The saved value is the EXPLICITLY set one (`getAll` holds only those):
+    * `getOption` reports a registered conf's default for an unset key, and
+    * restoring that would leave the default pinned on the session. */
   private[graft] def withConf[A](s: SparkSession, kvs: (String, String)*)(
       f: => A): A = {
-    val saved = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    val set = s.conf.getAll
+    val saved = kvs.map { case (k, _) => k -> set.get(k) }
     kvs.foreach { case (k, v) => s.conf.set(k, v) }
     try f
     finally saved.foreach { case (k, prev) =>

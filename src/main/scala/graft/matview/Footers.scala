@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -85,6 +86,28 @@ object Footers {
     }
     if (listed.isEmpty || listed.exists(_.isEmpty)) None
     else Some(listed.flatten.flatten)
+  }
+
+  /** Whether the parquet data at `path` (a file or a flat directory)
+    * stores a TIMESTAMP(NANOS) column, read from the footer of its first
+    * data file; None when there is no data file to read. */
+  def hasNanosTimestamp(spark: SparkSession, path: String): Option[Boolean] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val first =
+      if (!fs.exists(p)) None
+      else if (fs.getFileStatus(p).isFile) Some(fs.getFileStatus(p))
+      else fs.listStatus(p).toSeq.filter { e =>
+        // Spark's data-file naming rule, as in dataFiles
+        val n = e.getPath.getName
+        e.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }.minByOption(_.getPath.toString)
+    first.map(f => footer(spark, f).getFileMetaData.getSchema.getColumns
+      .asScala.exists(_.getPrimitiveType.getLogicalTypeAnnotation match {
+        case t: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation =>
+          t.getUnit == LogicalTypeAnnotation.TimeUnit.NANOS
+        case _ => false
+      }))
   }
 
   private def footer(spark: SparkSession, f: FileStatus): ParquetMetadata = {

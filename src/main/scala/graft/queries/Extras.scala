@@ -1350,9 +1350,7 @@ object Extras {
     // lazy and would re-plan under whatever width the session carries at
     // write time, not the width this key reports on its flag column.
     // The post-aggregation result is 60 rows, so the checkpoint is free.
-    val prev = s.conf.getOption("spark.graft.rangeJoin.binWidth")
-    s.conf.set("spark.graft.rangeJoin.binWidth", "14")
-    try {
+    withConf(s, "spark.graft.rangeJoin.binWidth" -> "14") {
       val naive = orderDays(s, d).join(promoWindows(s),
         col("day") >= col("start_day") && col("day") < col("end_day"))
       val plan = naive.queryExecution.executedPlan.toString
@@ -1364,11 +1362,6 @@ object Extras {
         .withColumn("rewrote_to_equi_join", lit(rewrote))
         .localCheckpoint()
         .orderBy("promo_id")
-    } finally {
-      prev match {
-        case Some(w) => s.conf.set("spark.graft.rangeJoin.binWidth", w)
-        case None => s.conf.unset("spark.graft.rangeJoin.binWidth")
-      }
     }
   }
 
@@ -1606,9 +1599,7 @@ object Extras {
     // this exercises the statistics path through the oracle gate.
     // Scoped: the previous width is restored so later naive range joins
     // in the session don't silently inherit the planning-time stats job.
-    val prev = s.conf.getOption("spark.graft.rangeJoin.binWidth")
-    s.conf.set("spark.graft.rangeJoin.binWidth", "auto")
-    try {
+    withConf(s, "spark.graft.rangeJoin.binWidth" -> "auto") {
       val promos = s.range(60).select(col("id").as("promo_id"),
         date_add(lit("1996-01-01").cast("date"),
           (col("id") * 10).cast("int")).as("start_date"))
@@ -1635,11 +1626,6 @@ object Extras {
         .withColumn("rewrote_to_equi_join", lit(rewrote))
         .localCheckpoint()
         .orderBy("promo_id")
-    } finally {
-      prev match {
-        case Some(w) => s.conf.set("spark.graft.rangeJoin.binWidth", w)
-        case None => s.conf.unset("spark.graft.rangeJoin.binWidth")
-      }
     }
   }
 

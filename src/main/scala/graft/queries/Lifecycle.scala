@@ -321,13 +321,8 @@ object Lifecycle {
     * scoped override so production and test plan under the same
     * planner environment. */
   private[graft] def withAutoBucketedScanDisabled[A](s: SparkSession)(
-      f: => A): A = {
-    val key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    try f
-    finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
-  }
+      f: => A): A =
+    withConf(s, "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false")(f)
 
   /** The lazy pruned-scan lookup — split out so PlanSpec can pin the
     * SelectedBucketsCount on the un-materialized plan. Caller must hold
@@ -1058,12 +1053,8 @@ object Lifecycle {
     // size-only estimate of the dim = its on-disk file size (no stats yet)
     val noStatsSize = s.table("g_stats_customer")
       .queryExecution.optimizedPlan.stats.sizeInBytes
-    val prevCbo = s.conf.getOption("spark.sql.cbo.enabled")
-    val prevThresh = s.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      s.conf.set("spark.sql.cbo.enabled", "true")
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold",
-        (noStatsSize - 1).toString)
+    withConf(s, "spark.sql.cbo.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> (noStatsSize - 1).toString) {
       val before = strategy
       s.sql(
         "ANALYZE TABLE g_stats_customer COMPUTE STATISTICS FOR ALL COLUMNS")
@@ -1071,15 +1062,6 @@ object Lifecycle {
       val n = joined.count()
       Seq((before, after, n, before != after))
         .toDF("join_no_stats", "join_with_stats", "n_rows", "flipped")
-    } finally {
-      prevCbo match {
-        case Some(v) => s.conf.set("spark.sql.cbo.enabled", v)
-        case None => s.conf.unset("spark.sql.cbo.enabled")
-      }
-      prevThresh match {
-        case Some(v) => s.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-        case None => s.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      }
     }
   }
 
@@ -1098,23 +1080,13 @@ object Lifecycle {
     */
   def joinBloomPruned(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val touched = Seq(
-      "spark.sql.optimizer.runtime.bloomFilter.enabled",
-      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-      "spark.sql.autoBroadcastJoinThreshold")
-    val saved = touched.map(k => k -> s.conf.getOption(k))
-    try {
-      s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      s.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-        "0")
-      s.conf.set(
-        "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold",
-        "100MB")
+    withConf(s,
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
       // broadcast off: the broadcast path prunes via its own mechanism;
       // the bloom filter targets the shuffle-join plan a 100 TB fact uses
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val dim = load(s, d, "orders")
         .filter(col("o_orderpriority") === "1-URGENT")
       val q = load(s, d, "lineitem")
@@ -1127,8 +1099,6 @@ object Lifecycle {
       val r = q.head()
       Seq((r.getString(0), r.getLong(1), r.getDouble(2), injected))
         .toDF("o_orderpriority", "n", "sum_price", "bloom_pruned")
-    } finally saved.foreach { case (k, v) =>
-      v.fold(s.conf.unset(k))(s.conf.set(k, _))
     }
   }
 
@@ -1213,9 +1183,7 @@ object Lifecycle {
       : Seq[(String, Long, Option[Long], Option[String], Long)] = {
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
     import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final}
-    val saved = s.conf.get("spark.sql.adaptive.enabled", "true")
-    try {
-      s.conf.set("spark.sql.adaptive.enabled", "false")
+    withConf(s, "spark.sql.adaptive.enabled" -> "false") {
       val df = explainFixture(s, d)
       df.collect() // populate SQLMetrics on THIS QueryExecution
       val nodes = df.queryExecution.executedPlan.collect {
@@ -1248,7 +1216,7 @@ object Lifecycle {
             v.flatMap(_._3.map(_._2)).sum)
         }
         .sortBy(_._1)
-    } finally s.conf.set("spark.sql.adaptive.enabled", saved)
+    }
   }
 
   /** Constraint validation as data (PK / NOT NULL / CHECK / FK over the

@@ -327,23 +327,18 @@ object StreamingOps {
     // the scoped overrides mutate session confs around start() — correct
     // for the sequential Bench/Verify drivers (one streaming query at a
     // time per session); concurrent streaming starts on one session would
-    // need a cloned session (spark.newSession) instead (r17 ADVICE)
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(p =>
-      spark.conf.set("spark.sql.shuffle.partitions", p.toString))
-    // no-data micro-batches exist to advance the watermark so APPEND-mode
+    // need a cloned session (spark.newSession) instead.
+    // No-data micro-batches exist to advance the watermark so APPEND-mode
     // windows finalize and timed-out state flushes without new input; a
     // COMPLETE-mode sketch drain re-emits its full state every batch, so
     // the trailing no-data batch only re-runs the plan to produce the
     // same table. The window-sketch keys opt out (~0.4s/run measured);
-    // append-mode and timeout-dependent callers keep the default. The
-    // caller's own setting (e.g. an external A/B harness) is captured and
-    // restored, not blindly unset (r17 ADVICE).
-    val prevNoData =
-      spark.conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    if (!noDataBatches) spark.conf
-      .set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try {
+    // append-mode and timeout-dependent callers keep the default.
+    val confs =
+      statePartitions.map(p => "spark.sql.shuffle.partitions" -> p.toString).toSeq ++
+        (if (noDataBatches) Nil
+         else Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))
+    graft.Tables.withConf(spark, confs: _*) {
       val q = agg.writeStream
         .outputMode(mode)
         .format("memory")
@@ -351,15 +346,6 @@ object StreamingOps {
         .start()
       try q.processAllAvailable()
       finally q.stop()
-    } finally {
-      statePartitions.foreach(_ =>
-        spark.conf.set("spark.sql.shuffle.partitions", prev))
-      if (!noDataBatches) prevNoData match {
-        case Some(v) => spark.conf
-          .set("spark.sql.streaming.noDataMicroBatches.enabled", v)
-        case None => spark.conf
-          .unset("spark.sql.streaming.noDataMicroBatches.enabled")
-      }
     }
     spark.table(name)
   }

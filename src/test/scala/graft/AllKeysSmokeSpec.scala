@@ -35,6 +35,10 @@ class AllKeysSmokeSpec extends AnyFunSuite {
 
   SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
     test(s"key executes: $name") {
+      // session hygiene: a key runs on the caller's shared session, so
+      // any conf it overrides must be scoped and restored — a leak would
+      // silently re-plan every later key under the leaked value
+      val confsBefore = spark.conf.getAll
       val df = fn(spark, SF)
       // the driver sorts columns BY NAME before hashing: duplicate or
       // empty column names would corrupt the compare silently
@@ -45,6 +49,11 @@ class AllKeysSmokeSpec extends AnyFunSuite {
       val n = df.count()
       if (!mayBeEmpty(name))
         assert(n > 0, s"key $name returned an empty result at sf0.001")
+      val confsAfter = spark.conf.getAll
+      val changed = (confsBefore.keySet ++ confsAfter.keySet)
+        .filter(k => confsBefore.get(k) != confsAfter.get(k))
+        .map(k => s"$k: ${confsBefore.get(k)} -> ${confsAfter.get(k)}")
+      assert(changed.isEmpty, s"key $name changed session confs: $changed")
     }
   }
 }

@@ -47,6 +47,22 @@ class EventStreamSpec extends AnyFunSuite {
     assert(result.exceptAll(batch).isEmpty && batch.exceptAll(result).isEmpty)
   }
 
+  test("runToCompletion's scoped confs leave an unset session conf unset") {
+    // a session where neither conf the drain overrides is set: restoring
+    // a read-back default would pin it on the session
+    val s2 = spark.newSession()
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.noDataMicroBatches.enabled")
+    keys.foreach(s2.conf.unset)
+    assert(keys.forall(k => !s2.conf.getAll.contains(k)))
+    val out = StreamingOps.runToCompletion(s2,
+      StreamingOps.tumblingAgg(StreamingOps.eventsStream(s2, SF)),
+      "stream_unset_confs", statePartitions = Some(3), noDataBatches = false)
+    assert(out.count() > 0)
+    val leaked = keys.filter(s2.conf.getAll.contains)
+    assert(leaked.isEmpty, s"confs left set: $leaked")
+  }
+
   test("stream-merged quantile sketch state is bit-identical to a " +
       "one-shot batch sketch per window") {
     import graft.functions.QuantileSketchAgg.quantile_sketch

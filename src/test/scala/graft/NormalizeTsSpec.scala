@@ -44,6 +44,39 @@ class NormalizeTsSpec extends AnyFunSuite {
     assert(reads("tz") == us.sorted)
   }
 
+  test("load reads a TIMESTAMP(NANOS) events file, and leaves the " +
+      "session's nanosAsLong unset for a MICROS one") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val us = Seq(1704067200000000L, 1704070815123456L)
+    val dir = Files.createTempDirectory("nanos_events").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+      new Path(s"$dir/events.parquet"), hconf)).withType(schema)
+      .withConf(hconf).build()
+    val g = new SimpleGroupFactory(schema)
+    try us.foreach(u => w.write(g.newGroup().append("ts", u * 1000L)))
+    finally w.close()
+
+    val micros = spark.newSession()
+    micros.conf.unset(key)
+    Tables.load(micros, TestSpark.SF, "events").count()
+    assert(!micros.conf.getAll.contains(key))
+
+    val nanos = spark.newSession()
+    nanos.conf.unset(key)
+    val df = Tables.load(nanos, dir, "events")
+    assert(df.schema("ts").dataType == TimestampType)
+    assert(df.select(unix_micros(col("ts"))).collect().map(_.getLong(0))
+      .sorted.toSeq == us)
+  }
+
   test("normalizeTs rejects an unexpected physical type loudly") {
     import spark.implicits._
     val bad = Seq("2024-01-01").toDF("ts")
