@@ -67,6 +67,17 @@ object Bench {
   /** One drift row: (key, best, median, quiet median). */
   type DriftRow = (String, Double, Double, Double)
 
+  /** The checked-in baselines were measured on one box, recorded as
+    * `box.cores`. On a box with another core count every drift row and
+    * canary flag would describe the box rather than the run, so the
+    * comparison goes dark: Some(reason) when the recorded count is
+    * present and differs from `cores`, None when the baselines apply. */
+  def foreignBox(props: java.util.Properties, cores: Int): Option[String] =
+    Option(props.getProperty("box.cores")).map(_.trim)
+      .filter(c => c.toIntOption.forall(_ != cores))
+      .map(c => s"baselines measured on $c cores, this box has $cores: " +
+        "drift/contention comparison off")
+
   /** Drift-row selection kernel: given a tier's (key, samples) pairs —
     * the samples as measured, i.e. the exact samples the queries_* maps
     * report — keep every key whose median exceeds 1.5x its quiet baseline
@@ -480,7 +491,8 @@ object Bench {
     // SPARK_GRAFT_BASELINES=<path> points elsewhere, =off disables the
     // comparison entirely — drift blocks empty, contended flags forced
     // false, and "baselines":"off" recorded so the driver knows the
-    // comparison was intentionally dark, not clean.
+    // comparison was intentionally dark, not clean. A file recorded on a
+    // box with another core count (`foreignBox`) is dropped the same way.
     val baselinesEnv = sys.env.get("SPARK_GRAFT_BASELINES")
     val baselinesOff = baselinesEnv.exists(v =>
       Seq("off", "none", "disabled").contains(v.toLowerCase))
@@ -516,6 +528,10 @@ object Bench {
           System.err.println(s"[bench] baselines '$baselinesSetting' " +
             s"unreadable (${e.getMessage}): drift/contention comparison off")
         }
+      }
+      foreignBox(p, nCores).foreach { why =>
+        System.err.println(s"[bench] $why")
+        p.clear()
       }
       p
     }

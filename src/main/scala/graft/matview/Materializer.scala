@@ -382,9 +382,16 @@ object Materializer {
         .forEach(f => java.nio.file.Files.deleteIfExists(f))
     }
 
-  /** Scratch root: inside the repo's target dir (gitignored, writable). */
-  def defaultScratch: String =
-    sys.props.getOrElse("graft.scratch", "/root/repo/target/scratch")
+  /** Scratch root: `-Dgraft.scratch`, else `target/scratch` under the
+    * process's working directory (gitignored, writable), so engine
+    * processes started from two checkouts do not share streaming and MV
+    * scratch. */
+  def defaultScratch: String = scratchOf(sys.props)
+
+  private[graft] def scratchOf(props: scala.collection.Map[String, String])
+      : String =
+    props.getOrElse("graft.scratch",
+      java.nio.file.Paths.get(props("user.dir"), "target", "scratch").toString)
 
   def apply(spark: SparkSession): Materializer =
     new Materializer(spark, defaultScratch)

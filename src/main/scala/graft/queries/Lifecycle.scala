@@ -1176,47 +1176,62 @@ object Lifecycle {
       .toDF("operator", "n_nodes", "rows_out", "time_metrics")
   }
 
-  /** The instrumented walk behind [[explainAnalyze]]; the last tuple slot
-    * is the summed MEASURED value of the operator's time metrics
-    * (nondeterministic — spec-asserted, not oracled). */
+  /** The instrumented run behind [[explainAnalyze]]: the fixture
+    * executed with AQE off, read through [[operatorStats]]. */
   private[graft] def explainAnalyzeRaw(s: SparkSession, d: String)
-      : Seq[(String, Long, Option[Long], Option[String], Long)] = {
-    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final}
+      : Seq[(String, Long, Option[Long], Option[String], Long)] =
     withConf(s, "spark.sql.adaptive.enabled" -> "false") {
       val df = explainFixture(s, d)
       df.collect() // populate SQLMetrics on THIS QueryExecution
-      val nodes = df.queryExecution.executedPlan.collect {
-        case p if !p.getClass.getSimpleName.startsWith("WholeStageCodegen") &&
-          p.getClass.getSimpleName != "InputAdapter" =>
-          val invariant = p match {
-            case a: BaseAggregateExec =>
-              a.aggregateExpressions.nonEmpty &&
-                a.aggregateExpressions.forall(e =>
-                  e.mode == Final || e.mode == Complete)
-            case _ => true
-          }
-          val timed = p.metrics.toSeq.collect {
-            case (nm, m)
-                if m.metricType == "timing" || m.metricType == "nsTiming" =>
-              (nm, m.value)
-          }
-          (p.getClass.getSimpleName.stripSuffix("Exec"),
-            if (invariant) p.metrics.get("numOutputRows").map(_.value)
-            else None,
-            timed)
-      }
-      nodes.groupBy(_._1).toSeq
-        .map { case (op, v) =>
-          val rows = v.flatMap(_._2)
-          val names = v.flatMap(_._3.map(_._1)).distinct.sorted
-          (op, v.size.toLong,
-            if (rows.isEmpty) None else Some(rows.sum),
-            if (names.isEmpty) None else Some(names.mkString("+")),
-            v.flatMap(_._3.map(_._2)).sum)
-        }
-        .sortBy(_._1)
+      operatorStats(df.queryExecution.executedPlan)
     }
+
+  private object Aqe
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
+  /** Per operator class of an executed plan, sorted by class: (class,
+    * node count, rows out, time-metric names, summed measured time). The
+    * walk descends through AQE wrappers into the final adaptive plan and
+    * skips the wrappers themselves and codegen/adapter nodes. Rows are
+    * reported only where they are partition-invariant: an aggregate
+    * counts only in Final/Complete mode. The last slot is the summed
+    * MEASURED time of those metrics in ns, ms-resolution ones scaled
+    * (nondeterministic). */
+  private[graft] def operatorStats(
+      plan: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[(String, Long, Option[Long], Option[String], Long)] = {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Complete, Final}
+    val nodes = Aqe.collect(plan) {
+      case p if !Seq("WholeStageCodegen", "InputAdapter", "AdaptiveSparkPlan")
+          .exists(p.getClass.getSimpleName.startsWith) &&
+          !p.getClass.getSimpleName.endsWith("QueryStageExec") =>
+        val invariant = p match {
+          case a: BaseAggregateExec =>
+            a.aggregateExpressions.nonEmpty &&
+              a.aggregateExpressions.forall(e =>
+                e.mode == Final || e.mode == Complete)
+          case _ => true
+        }
+        val timed = p.metrics.toSeq.collect {
+          case (nm, m) if m.metricType == "timing" => (nm, m.value * 1000000L)
+          case (nm, m) if m.metricType == "nsTiming" => (nm, m.value)
+        }
+        (p.getClass.getSimpleName.stripSuffix("Exec"),
+          if (invariant) p.metrics.get("numOutputRows").map(_.value)
+          else None,
+          timed)
+    }
+    nodes.groupBy(_._1).toSeq
+      .map { case (op, v) =>
+        val rows = v.flatMap(_._2)
+        val names = v.flatMap(_._3.map(_._1)).distinct.sorted
+        (op, v.size.toLong,
+          if (rows.isEmpty) None else Some(rows.sum),
+          if (names.isEmpty) None else Some(names.mkString("+")),
+          v.flatMap(_._3.map(_._2)).sum)
+      }
+      .sortBy(_._1)
   }
 
   /** Constraint validation as data (PK / NOT NULL / CHECK / FK over the

@@ -144,4 +144,22 @@ class BenchFlagsSpec extends AnyFunSuite {
       assert(retyped.isEmpty, s"fields with more than one JSON type: $retyped")
     }
   }
+
+  test("foreignBox: baselines recorded on another core count go dark; " +
+      "a matching or unrecorded count keeps them") {
+    def props(kv: (String, String)*) = {
+      val p = new java.util.Properties()
+      kv.foreach { case (k, v) => p.setProperty(k, v) }
+      p
+    }
+    val box32 = props("box.cores" -> "32", "sf1.agg_sum_group3" -> "0.5")
+    assert(Bench.foreignBox(box32, 32).isEmpty)
+    val why = Bench.foreignBox(box32, 4)
+    assert(why.exists(w => w.contains("32 cores") && w.contains("has 4")))
+    assert(Bench.foreignBox(props("box.cores" -> " 32 "), 32).isEmpty)
+    // no recorded box: nothing to compare, the baselines stand
+    assert(Bench.foreignBox(props("sf1.x" -> "1.0"), 4).isEmpty)
+    // an unreadable count cannot vouch for the box
+    assert(Bench.foreignBox(props("box.cores" -> "many"), 32).nonEmpty)
+  }
 }

@@ -225,4 +225,13 @@ class MaterializerSpec extends AnyFunSuite {
     assert(thrown eq boom)
     assert(!m.exists("f_bad") && !m.exists("f_after"))
   }
+
+  test("default scratch sits under the working directory; " +
+      "-Dgraft.scratch still wins") {
+    val wd = "/some/checkout"
+    assert(Materializer.scratchOf(Map("user.dir" -> wd)) ==
+      "/some/checkout/target/scratch")
+    assert(Materializer.scratchOf(
+      Map("user.dir" -> wd, "graft.scratch" -> "/elsewhere")) == "/elsewhere")
+  }
 }

@@ -14,7 +14,7 @@ import graft.matview.Snapshots
 class SnapshotsSpec extends AnyFunSuite {
   import TestSpark.{spark, SF}
 
-  private val root = "/root/repo/target/scratch/test_snaps"
+  private val root = TestSpark.scratch + "/test_snaps"
 
   test("append/overwrite commits version correctly and time travel holds") {
     val snap = new Snapshots(spark, root)

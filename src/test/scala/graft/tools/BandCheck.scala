@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: dumps the ENGINE's MinHash lane signature elements
   * (doc_id, i, s) and band keys (doc_id, bh) at a dataset dir to parquet,
   * plus the DuckDB banding-replay SQL for the same two relations, so the
@@ -21,13 +19,7 @@ object BandCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ProfKey.session()
 
     val (lanes, bands) = graft.ext.Dedup.bandCheckEngine(spark, sfDir)
     lanes.write.mode("overwrite").parquet(s"$outDir/lanes.parquet")

@@ -12,16 +12,7 @@ import org.apache.spark.sql.SparkSession
 object ProfAnnRecall {
   def main(args: Array[String]): Unit = {
     val d = args.lift(0).getOrElse("target/scratch/sf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = ProfKey.session()
     import graft.ext.Similarity._
 
     def pairs(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
