@@ -34,7 +34,7 @@ object Verify {
         System.err.println(s"[verify] $name failed: $msg")
         errors(name) = msg
         val keyDir = Paths.get(s"$outDir/$name")
-        graft.streaming.StreamingOps.del(keyDir)
+        graft.matview.Dirs.delete(keyDir)
         Files.createDirectories(keyDir)
         Files.writeString(keyDir.resolve("_ERROR"), msg)
       }

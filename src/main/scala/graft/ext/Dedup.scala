@@ -487,10 +487,10 @@ object Dedup {
 
   /** Streaming ingestion-time near-dup filter — the arrival-path dedup a
     * 100 TB pipeline runs continuously: documents arrive as a file stream
-    * (odd doc_ids, staged as 2 chunk files, one per micro-batch) and are
-    * checked against a STATIC historical corpus (even doc_ids): MinHash
-    * band-key collision candidates, then exact merge-walk Jaccard
-    * verification, inside `foreachBatch`. The history (signature + sorted
+    * (odd doc_ids, staged as 2 chunk files by doc_id mod 4, one per
+    * micro-batch) and are checked against a STATIC historical corpus
+    * (even doc_ids): MinHash band-key collision candidates, then exact
+    * merge-walk Jaccard verification, inside `foreachBatch`. The history (signature + sorted
     * set + band index) is built ONCE and localCheckpointed; each trigger
     * groups only its own batch's shingles, so streaming state is ZERO —
     * the dedup decision needs no cross-batch memory. That is what makes
@@ -505,6 +505,7 @@ object Dedup {
   def dedupStreamMinhash(s: SparkSession, d: String): DataFrame = {
     import java.nio.file.Paths
     import org.apache.spark.sql.types._
+    import graft.streaming.StreamingOps.{drain, replay, stage}
     // scratch keyed by the dataset dir (the ingest_csv_quoted precedent):
     // a fixed path would let a later call for a different dir clobber the
     // sink under an earlier, not-yet-executed returned DataFrame
@@ -517,7 +518,7 @@ object Dedup {
     val staged = Paths.get(s"$scratch/stream_dedup_src_$key")
     val sink = Paths.get(s"$scratch/stream_dedup_hits_$key")
     val ckpt = Paths.get(s"$scratch/stream_dedup_ckpt_$key")
-    Seq(staged, sink, ckpt).foreach(graft.streaming.StreamingOps.del)
+    Seq(sink, ckpt).foreach(graft.matview.Dirs.delete)
 
     val docs = load(s, d, "documents")
     val hist = minhashGroupedFrom(docs.filter(col("doc_id") % 2 === 0))
@@ -525,16 +526,15 @@ object Dedup {
     val histBands = bandBuckets(hist)
     val histSets = hist.select(col("doc_id"), col("hs"))
 
-    docs.filter(col("doc_id") % 2 === 1)
-      .repartition(2)
-      .write.mode("overwrite").parquet(staged.toString)
+    // each arriving doc is judged against the history alone, so the
+    // split of the arriving half into batches does not change the output
+    stage(staged, docs.filter(col("doc_id") % 2 === 1).coalesce(1)
+      .withColumn("__chunk",
+        when(pmod(col("doc_id"), lit(4)) === 1, 1).otherwise(2)))
 
-    val arriving = s.readStream
-      .schema("doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged.toString)
-
-    val q = arriving.writeStream
+    drain(replay(s, staged, StructType.fromDDL(
+        "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG"))
+      .writeStream
       .outputMode("append")
       .option("checkpointLocation", ckpt.toString)
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -546,10 +546,7 @@ object Dedup {
         // the whole band-join + verify once, then write would recompute it
         hits.write.mode("append").parquet(sink.toString)
         ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+      })
 
     // explicit schema: an all-empty run writes the sink dir with zero
     // part files (the committer still creates it), so inference would fail

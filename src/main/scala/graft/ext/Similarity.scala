@@ -827,8 +827,8 @@ object Similarity {
     * is exactly the property worth pinning. Extra fact vs the batch
     * key: `replay_skipped` (the re-delivered batch changed nothing). */
   def similarityIndexStream(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import scala.jdk.CollectionConverters._
+    import java.nio.file.Paths
+    import graft.streaming.StreamingOps.{drain, replay, stage}
     val all = load(s, d, "embeddings").select(col("vec_id"), col("embedding"))
     val n = all.count()
     require(n >= 6,
@@ -841,30 +841,16 @@ object Similarity {
     val (_, baseLists, refined) =
       ivfListsOn(all.filter(col("vec_id") < cuts.head), NLISTS)
 
-    // stage the arriving half as 3 time-ordered chunk files (the
-    // streaming-key staging discipline: one file per micro-batch,
-    // mtime-ordered so the file source delivers them in arrival order)
+    // stage the arriving half as 3 time-ordered chunk files in one job
+    // (the streaming-key staging discipline: one file per micro-batch,
+    // delivered in arrival order)
     val scratch = graft.matview.Materializer.defaultScratch
     val staged = Paths.get(s"$scratch/idx_stream_src_${dirKey(d)}")
     val ckpt = Paths.get(s"$scratch/idx_stream_ckpt_${dirKey(d)}")
-    Seq(staged, ckpt).foreach(graft.streaming.StreamingOps.del)
-    Files.createDirectories(staged)
-    (0 until 3).foreach { i =>
-      val tmp = staged.resolve(s"tmp_$i")
-      all.filter(col("vec_id") >= cuts(i) && col("vec_id") < cuts(i + 1))
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = {
-        val l = Files.list(tmp)
-        try l.iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet")).get
-        finally l.close()
-      }
-      val dest = staged.resolve(f"chunk_${i + 1}%02d.parquet")
-      Files.move(part, dest, StandardCopyOption.REPLACE_EXISTING)
-      Files.setLastModifiedTime(dest,
-        java.nio.file.attribute.FileTime.fromMillis(1000000L * (i + 1)))
-      graft.streaming.StreamingOps.del(tmp)
-    }
+    graft.matview.Dirs.delete(ckpt)
+    stage(staged, all.filter(col("vec_id") >= cuts(0)).coalesce(1)
+      .withColumn("__chunk", when(col("vec_id") < cuts(1), 1)
+        .when(col("vec_id") < cuts(2), 2).otherwise(3)))
 
     val snap = new graft.matview.Snapshots(s, s"$scratch/ivfidx")
     val t = s"ivf_stream_${dirKey(d)}"
@@ -881,11 +867,7 @@ object Similarity {
       org.apache.spark.sql.types.StructField("embedding",
         org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.FloatType))))
-    val q = s.readStream
-      .schema(vecSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged.toString)
-      .writeStream
+    drain(replay(s, staged, vecSchema).writeStream
       .outputMode("append")
       .option("checkpointLocation", ckpt.toString)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -895,10 +877,7 @@ object Similarity {
           Seq("cid"), txn = Some(s"vec-$batchId"))
         if (indexMaintain(snap, t, maxDeltas = 2)) folds += 1
         ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+      })
     val committed = snap.latest(t) + 1
     // at-least-once re-delivery, AFTER the fold absorbed the ingestion
     // txn ids into the clustered shards: batch 1's data under its

@@ -149,11 +149,9 @@ final class Materializer(spark: SparkSession, scratchDir: String) {
   private def lockFor(name: String): Object =
     locks.computeIfAbsent(name, _ => new Object)
 
-  /** Write-then-swap: the new content lands in `__stage`, the live dir
-    * moves old-aside, the stage moves in, the old dir is dropped — a
-    * crash can orphan a directory but never lose the MV (unlike a plain
-    * mode("overwrite"), which deletes the target before the job commits).
-    * Takes a THUNK, not a plan: a plan that READS the current storage
+  /** Write-then-swap through [[Dirs.swap]]: a crash can orphan a
+    * directory but never lose the MV (unlike a plain mode("overwrite"),
+    * which deletes the target before the job commits). Takes a THUNK, not a plan: a plan that READS the current storage
     * (the incremental-merge case) must be CONSTRUCTED inside the lock
     * too — spark.read.parquet eagerly lists the storage's files, so a
     * plan built before the lock would execute against a pre-swap file
@@ -162,22 +160,12 @@ final class Materializer(spark: SparkSession, scratchDir: String) {
     * not just the swap. */
   private def stagedOverwrite(name: String, mkDf: () => DataFrame): Unit =
     lockFor(name).synchronized {
-      val tmp = java.nio.file.Paths.get(path(name) + "__stage")
-      val old = java.nio.file.Paths.get(path(name) + "__old")
-      val p = java.nio.file.Paths.get(path(name))
-      // crash recovery FIRST (and before the thunk, which may read p): a
-      // crash between old-aside and stage-in leaves __old holding the ONLY
-      // copy — restore it; only then is a leftover __old mere garbage
-      if (!java.nio.file.Files.exists(p) && java.nio.file.Files.exists(old))
-        java.nio.file.Files.move(old, p)
-      else Materializer.deleteRecursively(old)
-      val df = mkDf()
-      try {
-        df.write.mode("overwrite").parquet(tmp.toString)
-        if (java.nio.file.Files.exists(p)) java.nio.file.Files.move(p, old)
-        java.nio.file.Files.move(tmp, p)
-        Materializer.deleteRecursively(old)
-      } finally Materializer.deleteRecursively(tmp)
+      // the thunk runs inside the swap, after its crash recovery: it may
+      // read the live dir
+      Dirs.swap(java.nio.file.Paths.get(path(name))) { stage =>
+        mkDf().write.mode("overwrite").parquet(stage.toString)
+        true
+      }
     }
 
   // ---- incremental refresh ----------------------------------------------
@@ -365,23 +353,14 @@ final class Materializer(spark: SparkSession, scratchDir: String) {
       // be "restored" by the next create's crash recovery (then
       // immediately overwritten — harmless but wasteful), and __stage is
       // plain garbage
-      Materializer.deleteRecursively(java.nio.file.Paths.get(path(n)))
-      Materializer.deleteRecursively(
-        java.nio.file.Paths.get(path(n) + "__old"))
-      Materializer.deleteRecursively(
-        java.nio.file.Paths.get(path(n) + "__stage"))
+      val live = java.nio.file.Paths.get(path(n))
+      Seq(live, Dirs.oldOf(live), Dirs.stageOf(live)).foreach(Dirs.delete)
     }
     order.toSeq
   }
 }
 
 object Materializer {
-  private[matview] def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-    }
-
   /** Scratch root: `-Dgraft.scratch`, else `target/scratch` under the
     * process's working directory (gitignored, writable), so engine
     * processes started from two checkouts do not share streaming and MV

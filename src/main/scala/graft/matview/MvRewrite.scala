@@ -97,11 +97,6 @@ final class MvRewrite(spark: SparkSession) extends Rule[LogicalPlan] {
     }.toSeq
     if (candidates.isEmpty) None
     else {
-      if (sys.props.contains("graft.mvrewrite.debug"))
-        candidates.foreach { case (p, g) => println(
-          s"[mvrw] candidate grain=$g size=${
-            try p.stats.sizeInBytes catch { case _: Throwable => -1 }} " +
-            s"plan=${p.simpleString(3)}") }
       Some(candidates.minBy { case (p, grain) =>
         (try p.stats.sizeInBytes catch { case _: Throwable => BigInt(Long.MaxValue) },
           grain)

@@ -579,11 +579,7 @@ class Snapshots(spark: SparkSession, root: String,
           p.getFileName.toString.startsWith("d"))
       finally s.close()
     val dead = dataDirs.filterNot(p => live.contains(p.toString))
-    dead.foreach { p =>
-      val w = Files.walk(p)
-      try w.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-      finally w.close()
-    }
+    dead.foreach(Dirs.delete)
     (0 until retainFrom).foreach(v => Files.deleteIfExists(manifest(t, v)))
     // claim janitor (r17): the dropped manifests' claims go with them —
     // version numbering never re-enters the pruned range, so the files
@@ -597,12 +593,7 @@ class Snapshots(spark: SparkSession, root: String,
     * drop only directories unreferenced by retained manifests
     * ([[vacuum]]). */
   def drop(t: String): Unit = {
-    val dir = Paths.get(tdir(t))
-    if (Files.exists(dir)) {
-      val s = Files.walk(dir)
-      try s.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-      finally s.close()
-    }
+    Dirs.delete(Paths.get(tdir(t)))
     // the dropped table's consumed claims go with its history — version
     // numbering restarts at 0, so a re-created table must be claimable
     claim.dropTable(t)
@@ -745,14 +736,8 @@ object Snapshots {
       }
     }
 
-    override def dropTable(table: String): Unit = {
-      val dir = Paths.get(claimRoot, table)
-      if (Files.exists(dir)) {
-        val s = Files.walk(dir)
-        try s.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-        finally s.close()
-      }
-    }
+    override def dropTable(table: String): Unit =
+      Dirs.delete(Paths.get(claimRoot, table))
   }
 
   private[graft] val statsFile = "_zstats"

@@ -27,10 +27,8 @@ object StreamDemo {
     // stateful sessionization (flatMapGroupsWithState + event-time timeout)
     val sessions = StreamingOps.sessionizeStream(
       StreamingOps.eventsStreamWithFlush(spark, dir))
-    val sq = sessions.writeStream
-      .outputMode("append").format("memory").queryName("demo_sessions")
-      .start()
-    try sq.processAllAvailable() finally sq.stop()
+    StreamingOps.drain(sessions.writeStream
+      .outputMode("append").format("memory").queryName("demo_sessions"))
     val sess = spark.table("demo_sessions")
       .filter(org.apache.spark.sql.functions.col("user_id") =!= -1)
     sess.orderBy("user_id", "session_id").show(8, truncate = false)

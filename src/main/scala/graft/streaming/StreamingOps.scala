@@ -1,10 +1,17 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 
 import graft.Tables.{dec, dirKey, exactSum}
+import graft.matview.{Dirs, Footers}
+import graft.matview.Materializer.defaultScratch
 
 /** Structured Streaming surface: the same event-time operators as
   * [[graft.ext.EventOps]], expressed over an unbounded source. The
@@ -33,40 +40,89 @@ object StreamingOps {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** Write one normalized single-file parquet chunk into `staged` with a
-    * pinned modification time (the file stream source orders by mtime). */
-  private def writeChunk(df: DataFrame, staged: java.nio.file.Path,
-      name: String, mtime: Long): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    val tmp = staged.resolve("tmp_" + name)
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val listing = Files.list(tmp)
-    val part =
-      try listing.filter(_.getFileName.toString.endsWith(".parquet"))
-        .findFirst().get()
-      finally listing.close()
-    Files.move(part, staged.resolve(name), StandardCopyOption.REPLACE_EXISTING)
-    del(tmp)
-    Files.setLastModifiedTime(staged.resolve(name),
-      java.nio.file.attribute.FileTime.fromMillis(mtime))
+  // ---- bounded file-stream replay: stage, replay, drain ---------------
+
+  /** Replace `dir` with one file per chunk of `chunks`, a frame tagged
+    * with a `__chunk` number: chunk NN lands as `chunk_NN.parquet` with
+    * modification time NN x 10^6 ms, so [[replay]] delivers the chunks as
+    * ordered micro-batches. One distributed job writes every chunk (the
+    * tag is a partition column, so the files keep the frame's other
+    * columns). Each chunk must sit in ONE partition of `chunks`: a chunk
+    * that lands as several part files fails loudly, naming the chunk. An
+    * empty chunk writes nothing and is skipped. */
+  private[graft] def stage(dir: Path, chunks: DataFrame): Unit = {
+    def list(p: Path): List[Path] = {
+      val l = Files.list(p)
+      try l.iterator().asScala.toList finally l.close()
+    }
+    Dirs.delete(dir)
+    val tmp = dir.resolve("_chunks")
+    try {
+      chunks.write.partitionBy("__chunk").parquet(tmp.toString)
+      list(tmp).filter(_.getFileName.toString.startsWith("__chunk="))
+        .foreach { sub =>
+          val i = sub.getFileName.toString.stripPrefix("__chunk=").toInt
+          val parts =
+            list(sub).filter(_.getFileName.toString.endsWith(".parquet"))
+          require(parts.size == 1, s"staged chunk $i landed as " +
+            s"${parts.size} part files: a chunk must sit in one partition")
+          val dest = dir.resolve(f"chunk_$i%02d.parquet")
+          Files.move(parts.head, dest, StandardCopyOption.REPLACE_EXISTING)
+          Files.setLastModifiedTime(dest,
+            java.nio.file.attribute.FileTime.fromMillis(1000000L * i))
+        }
+    } finally Dirs.delete(tmp)
+  }
+
+  /** The file stream over a [[stage]]d dir, one file per micro-batch in
+    * modification-time (= chunk) order. */
+  private[graft] def replay(spark: SparkSession, dir: Path,
+      schema: StructType): DataFrame =
+    spark.readStream
+      .schema(schema)
+      .option("maxFilesPerTrigger", 1)
+      .parquet(dir.toString)
+
+  /** Start `writer`'s query, run it until its bounded source is
+    * exhausted, stop it. */
+  private[graft] def drain(writer: DataStreamWriter[_]): Unit = {
+    val q = writer.start()
+    try q.processAllAvailable()
+    finally q.stop()
+  }
+
+  /** Stage the events `chunks` under scratch `name` and replay them. */
+  private def stagedEvents(spark: SparkSession, name: String,
+      chunks: DataFrame): DataFrame = {
+    val staged = Paths.get(s"$defaultScratch/$name")
+    stage(staged, chunks)
+    replay(spark, staged, eventsRawSchema)
+  }
+
+  /** `events` as chunk 1 plus a one-event sentinel chunk 2 (user_id -1,
+    * event_type "flush") `afterUs` past the last real timestamp: the
+    * sentinel's micro-batch advances the watermark past every real
+    * window. */
+  private def withSentinel(events: DataFrame, afterUs: Long): DataFrame = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    val maxUs = events.agg(max(unix_micros(col("ts"))))
+      .collect().head.getLong(0)
+    events.coalesce(1).withColumn("__chunk", lit(1)).unionByName(
+      Seq((-1L, -1L, "flush", 0.0, "{}", 2))
+        .toDF("event_id", "user_id", "event_type", "value", "props", "__chunk")
+        .withColumn("ts", timestamp_micros(lit(maxUs + afterUs))),
+      allowMissingColumns = true)
   }
 
   /** Unbounded view of the events table (file-source stream). The file
     * stream source requires a directory, so the events fixture is staged
     * (normalized) into scratch — in production the source would already be
     * a directory of arriving files with a known schema. */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val staged = Paths.get(
-      s"${graft.matview.Materializer.defaultScratch}/stream_events")
-    del(staged)
-    Files.createDirectories(staged)
-    writeChunk(graft.Tables.load(spark, dir, "events"), staged,
-      "events.parquet", 1000000L)
-    spark.readStream
-      .schema(eventsRawSchema)
-      .parquet(staged.toString)
-  }
+  def eventsStream(spark: SparkSession, dir: String): DataFrame =
+    stagedEvents(spark, "stream_events",
+      graft.Tables.load(spark, dir, "events").coalesce(1)
+        .withColumn("__chunk", lit(1)))
 
   /** Tumbling 1-hour event-time aggregation with watermark — identical
     * semantics to the batch events_window_tumbling once the stream drains. */
@@ -253,18 +309,9 @@ object StreamingOps {
   /** Chunked arrival replay of the events fixture: 4 time-range chunk
     * files, one micro-batch each — the bounded harness that makes a
     * stateful operator genuinely carry state ACROSS batches. */
-  def eventsStreamChunked(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val staged = Paths.get(
-      s"${graft.matview.Materializer.defaultScratch}/stream_chunked")
-    del(staged)
-    Files.createDirectories(staged)
-    stageChunkFiles(spark, dir, staged)
-    spark.readStream
-      .schema(eventsRawSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged.toString)
-  }
+  def eventsStreamChunked(spark: SparkSession, dir: String): DataFrame =
+    stagedEvents(spark, "stream_chunked",
+      stageChunks(graft.Tables.load(spark, dir, "events")))
 
   /** Bounded-stream harness for the stateful operators: stages the events
     * file plus a later "flush" sentinel file (one event, user_id = -1, far
@@ -272,31 +319,10 @@ object StreamingOps {
     * the sentinel batch advances the watermark and times out every
     * remaining session state. Production streams run forever and need no
     * sentinel; this exists so bounded tests observe the timeout path. */
-  def eventsStreamWithFlush(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import spark.implicits._
-    val staged = Paths.get(
-      s"${graft.matview.Materializer.defaultScratch}/stream_events_flush")
-    del(staged)
-    Files.createDirectories(staged)
-    val events = graft.Tables.load(spark, dir, "events")
-    writeChunk(events, staged, "00_events.parquet", 1000000L)
-
-    val maxUs = events.agg(max(unix_micros(col("ts"))))
-      .collect().head.getLong(0)
-    val flushUs = maxUs + GAP_US + 7200L * 1000000L
-    writeChunk(
-      Seq((-1L, -1L, "flush", 0.0, "{}"))
-        .toDF("event_id", "user_id", "event_type", "value", "props")
-        .withColumn("ts", timestamp_micros(lit(flushUs)))
-        .select("event_id", "ts", "user_id", "event_type", "value", "props"),
-      staged, "10_flush.parquet", 2000000L)
-
-    spark.readStream
-      .schema(eventsRawSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged.toString)
-  }
+  def eventsStreamWithFlush(spark: SparkSession, dir: String): DataFrame =
+    stagedEvents(spark, "stream_events_flush",
+      withSentinel(graft.Tables.load(spark, dir, "events"),
+        GAP_US + 7200L * 1000000L))
 
   /** Run a streaming aggregation to completion against a bounded file
     * source and return the final result — used by tests to prove
@@ -339,13 +365,7 @@ object StreamingOps {
         (if (noDataBatches) Nil
          else Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false"))
     graft.Tables.withConf(spark, confs: _*) {
-      val q = agg.writeStream
-        .outputMode(mode)
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+      drain(agg.writeStream.outputMode(mode).format("memory").queryName(name))
     }
     spark.table(name)
   }
@@ -410,45 +430,19 @@ object StreamingOps {
     * before the final MV is read back (bounded-test scaffolding; a real
     * deployment points the same query at an arriving directory). */
   def streamingMatviewRefresh(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val scratch = graft.matview.Materializer.defaultScratch
-    val staged = Paths.get(s"$scratch/stream_mv_src")
-    val mvPath = Paths.get(s"$scratch/mv_stream_hourly")
-    val ckpt = Paths.get(s"$scratch/mv_stream_ckpt")
-    Seq(staged, mvPath, ckpt).foreach(del)
-    Files.createDirectories(staged)
-
-    stageChunkFiles(spark, dir, staged)
-
+    val (staged, mvPath, ckpt) =
+      scratchDirs("stream_mv_src", "mv_stream_hourly", "mv_stream_ckpt")
+    stage(staged, stageChunks(graft.Tables.load(spark, dir, "events")))
     upsertMvRun(spark, staged, mvPath, ckpt)
   }
 
-  /** Write the events fixture into `staged` as 4 time-range chunk files
-    * with ascending modification times, so a maxFilesPerTrigger=1 file
-    * stream replays them as 4 ordered micro-batches. One distributed job
-    * writes all chunks (each range partition lands in its own __chunk=i
-    * directory; the partition column itself is not stored, so the chunk
-    * files keep the raw events schema). */
-  private[graft] def stageChunkFiles(spark: SparkSession, dir: String,
-      staged: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    val raw = graft.Tables.load(spark, dir, "events")
-    val tmp = staged.resolve("tmp_chunks")
-    stageChunks(raw).write.partitionBy("__chunk")
-      .mode("overwrite").parquet(tmp.toString)
-    (1 to 4).foreach { i =>
-      val sub = tmp.resolve(s"__chunk=$i")
-      if (Files.exists(sub)) {
-        val part = Files.list(sub)
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .findFirst().get()
-        Files.move(part, staged.resolve(f"chunk_$i%02d.parquet"),
-          StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(staged.resolve(f"chunk_$i%02d.parquet"),
-          java.nio.file.attribute.FileTime.fromMillis(1000000L * i))
-      }
-    }
-    del(tmp)
+  /** A stream key's (staged source, sink, checkpoint) under scratch; the
+    * sink and checkpoint start empty ([[stage]] replaces the source). */
+  private def scratchDirs(src: String, sink: String, ckpt: String)
+      : (Path, Path, Path) = {
+    val dirs = Seq(src, sink, ckpt).map(n => Paths.get(s"$defaultScratch/$n"))
+    dirs.tail.foreach(Dirs.delete)
+    (dirs(0), dirs(1), dirs(2))
   }
 
   /** Time-ordered 4-way chunking of the arrival fixture, fully
@@ -470,55 +464,32 @@ object StreamingOps {
     * directory, upserting each micro-batch's changed groups into the MV
     * at `mvPath`; returns the final MV. Shared by the streaming-refresh
     * and late-drop keys. */
-  private def upsertMvRun(
-      spark: SparkSession,
-      staged: java.nio.file.Path,
-      mvPath: java.nio.file.Path,
-      ckpt: java.nio.file.Path): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val events = spark.readStream
-      .schema(eventsRawSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged.toString)
-    val agg = tumblingAgg(events)
-
-    val q = agg.writeStream
+  private[graft] def upsertMvRun(
+      spark: SparkSession, staged: Path, mvPath: Path, ckpt: Path)
+      : DataFrame = {
+    drain(tumblingAgg(replay(spark, staged, eventsRawSchema)).writeStream
       .outputMode("update")
       .option("checkpointLocation", ckpt.toString)
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val upserts = batch.persist()
         try {
-          if (upserts.count() > 0) {
-            // crash recovery: a swap interrupted between old-aside and
-            // stage-in leaves only __old — restore before planning
-            val oldP = Paths.get(mvPath.toString + "__old")
-            if (!Files.exists(mvPath) && Files.exists(oldP))
-              Files.move(oldP, mvPath)
-            if (Files.exists(mvPath)) {
-              // shared MERGE primitive, replace resolution: each upsert
-              // carries the group's full new state — naturally idempotent
-              // under micro-batch replay (re-replacing with the same
-              // state is a no-op), so no txn marker is needed here
-              val merged = graft.matview.Merge.replace(
-                graft.matview.Footers.read(spark, Seq(mvPath.toString)), upserts,
+          if (upserts.count() > 0) Dirs.swap(mvPath) { stage =>
+            // shared MERGE primitive, replace resolution: each upsert
+            // carries the group's full new state — naturally idempotent
+            // under micro-batch replay (re-replacing with the same state
+            // is a no-op), so no txn marker is needed here
+            val merged =
+              if (!Files.exists(mvPath)) upserts
+              else graft.matview.Merge.replace(
+                Footers.read(spark, Seq(mvPath.toString)), upserts,
                 Seq("hour_start", "event_type"))
-              val tmp = Paths.get(mvPath.toString + "__stage")
-              merged.write.mode("overwrite").parquet(tmp.toString)
-              // old-aside-first: del-then-move had a window where a crash
-              // lost the whole MV
-              del(oldP)
-              Files.move(mvPath, oldP)
-              Files.move(tmp, mvPath)
-              del(oldP)
-            } else upserts.write.parquet(mvPath.toString)
+            merged.write.mode("overwrite").parquet(stage.toString)
+            true
           }
         } finally upserts.unpersist()
         ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    graft.matview.Footers.read(spark, Seq(mvPath.toString))
+      })
+    Footers.read(spark, Seq(mvPath.toString))
       .orderBy("hour_start", "event_type")
   }
 
@@ -536,40 +507,18 @@ object StreamingOps {
     * alone — exactly what the oracle computes — even though the late
     * duplicates really were fed through the stream. */
   def streamingLateDrop(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    import spark.implicits._
-    val scratch = graft.matview.Materializer.defaultScratch
-    val staged = Paths.get(s"$scratch/stream_late_src")
-    val mvPath = Paths.get(s"$scratch/mv_stream_late")
-    val ckpt = Paths.get(s"$scratch/mv_stream_late_ckpt")
-    Seq(staged, mvPath, ckpt).foreach(del)
-    Files.createDirectories(staged)
-
+    val (staged, mvPath, ckpt) =
+      scratchDirs("stream_late_src", "mv_stream_late", "mv_stream_late_ckpt")
     val events = graft.Tables.load(spark, dir, "events")
-    writeChunk(events, staged, "chunk_01.parquet", 1000000L)
-    val maxUs = events.agg(max(unix_micros(col("ts"))))
-      .collect().head.getLong(0)
-    writeChunk(
-      Seq((-1L, -1L, "flush", 0.0, "{}"))
-        .toDF("event_id", "user_id", "event_type", "value", "props")
-        .withColumn("ts", timestamp_micros(lit(maxUs + 4L * 3600 * 1000000L)))
-        .select("event_id", "ts", "user_id", "event_type", "value", "props"),
-      staged, "chunk_02.parquet", 2000000L)
-    writeChunk(
+    stage(staged, withSentinel(events, 4L * 3600 * 1000000L).unionByName(
       events.orderBy(col("ts"), col("event_id")).limit(100)
-        .withColumn("event_id", col("event_id") + 1000000000L),
-      staged, "chunk_03.parquet", 3000000L)
+        .withColumn("event_id", col("event_id") + 1000000000L)
+        .withColumn("__chunk", lit(3))))
 
     upsertMvRun(spark, staged, mvPath, ckpt)
       .filter(col("event_type") =!= "flush") // the sentinel's own group
       .withColumn("n_late_injected", lit(100L))
   }
-
-  private[graft] def del(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-    }
 
   /** Streaming CDC application — the continuous face of the batch
     * last-writer-wins apply ([[graft.ext.EventOps.eventsCdcApply]]): the
@@ -586,77 +535,10 @@ object StreamingOps {
     * stream == batch. Per batch this touches |batch keys| + |state|
     * rows — never the full change history. */
   def streamingCdcApply(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val scratch = graft.matview.Materializer.defaultScratch
-    val staged = Paths.get(s"$scratch/stream_cdc_src")
-    val statePath = Paths.get(s"$scratch/stream_cdc_state")
-    val ckpt = Paths.get(s"$scratch/stream_cdc_ckpt")
-    Seq(staged, statePath, ckpt).foreach(del)
-    Files.createDirectories(staged)
-    stageChunkFiles(spark, dir, staged)
-    val events = spark.readStream
-      .schema(eventsRawSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged.toString)
-    val q = events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // crash recovery first (a swap interrupted between old-aside and
-        // stage-in leaves only __old), then the exactly-once guard: the
-        // applied batch id travels INSIDE the state dir (underscore
-        // files are invisible to the parquet reader), so state + marker
-        // swap atomically and a re-delivered micro-batch — whose
-        // n_changes += bn fold is NOT idempotent — becomes a no-op.
-        val oldP = Paths.get(statePath.toString + "__old")
-        if (!Files.exists(statePath) && Files.exists(oldP))
-          Files.move(oldP, statePath)
-        val appliedF = statePath.resolve("_applied_batch")
-        val applied =
-          if (Files.exists(appliedF)) Files.readString(appliedF).trim.toLong
-          else -1L
-        if (batchId > applied) {
-        val lww = batch.groupBy(col("user_id").as("k"))
-          .agg(max(struct(col("ts"), col("event_id"),
-            col("event_type").as("t"), col("value").as("v"))).as("last"),
-            count(lit(1)).as("bn"))
-          .select(col("k"), (col("last.t") =!= "error").as("b_alive"),
-            col("last.v").as("b_val"), col("bn"))
-        val merged =
-          if (!Files.exists(statePath))
-            lww.select(col("k"), col("b_alive").as("alive"),
-              col("b_val").as("balance"), col("bn").as("n_changes"))
-          else {
-            val prev = graft.matview.Footers.read(spark, Seq(statePath.toString))
-            // batch-wins is decided on KEY PRESENCE (lww("k") not null),
-            // never by coalescing payloads: a last writer whose value IS
-            // NULL must overwrite the older balance with NULL, exactly
-            // as the batch apply and the shared oracle do
-            val inBatch = lww("k").isNotNull
-            prev.join(lww, prev("k") === lww("k"), "full_outer")
-              .select(
-                coalesce(lww("k"), prev("k")).as("k"),
-                when(inBatch, col("b_alive")).otherwise(col("alive"))
-                  .as("alive"),
-                when(inBatch, col("b_val")).otherwise(col("balance"))
-                  .as("balance"),
-                (coalesce(col("n_changes"), lit(0L)) +
-                  coalesce(col("bn"), lit(0L))).as("n_changes"))
-          }
-        val tmp = Paths.get(statePath.toString + "__stage")
-        merged.write.mode("overwrite").parquet(tmp.toString)
-        Files.writeString(tmp.resolve("_applied_batch"), batchId.toString)
-        del(oldP)
-        if (Files.exists(statePath)) Files.move(statePath, oldP)
-        Files.move(tmp, statePath)
-        del(oldP)
-        }
-        ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
-    val state = graft.matview.Footers.read(spark, Seq(statePath.toString))
+    val (staged, statePath, ckpt) =
+      scratchDirs("stream_cdc_src", "stream_cdc_state", "stream_cdc_ckpt")
+    stage(staged, stageChunks(graft.Tables.load(spark, dir, "events")))
+    val state = cdcStateRun(spark, staged, statePath, ckpt)
     val base = graft.Tables.load(spark, dir, "customer")
       .select(col("c_custkey").cast("long").as("ck"), col("c_acctbal"))
     base.join(state, col("ck") === col("k"), "full_outer")
@@ -667,6 +549,63 @@ object StreamingOps {
           .otherwise(col("c_acctbal")).as("balance"),
         coalesce(col("n_changes"), lit(0L)).as("n_changes"))
       .orderBy("custkey")
+  }
+
+  /** Drain the staged change log into the per-key state table at
+    * `statePath` (see [[streamingCdcApply]]); returns the final state. */
+  private[graft] def cdcStateRun(
+      spark: SparkSession, staged: Path, statePath: Path, ckpt: Path)
+      : DataFrame = {
+    drain(replay(spark, staged, eventsRawSchema).writeStream
+      .outputMode("append")
+      .option("checkpointLocation", ckpt.toString)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        // exactly-once guard, read after the swap's crash recovery: the
+        // applied batch id travels INSIDE the state dir (underscore files
+        // are invisible to the parquet reader), so state + marker swap
+        // together and a re-delivered micro-batch — whose n_changes += bn
+        // fold is NOT idempotent — is declined.
+        Dirs.swap(statePath) { stage =>
+          val appliedF = statePath.resolve("_applied_batch")
+          val applied =
+            if (Files.exists(appliedF)) Files.readString(appliedF).trim.toLong
+            else -1L
+          batchId > applied && {
+            val lww = batch.groupBy(col("user_id").as("k"))
+              .agg(max(struct(col("ts"), col("event_id"),
+                col("event_type").as("t"), col("value").as("v"))).as("last"),
+                count(lit(1)).as("bn"))
+              .select(col("k"), (col("last.t") =!= "error").as("b_alive"),
+                col("last.v").as("b_val"), col("bn"))
+            val merged =
+              if (!Files.exists(statePath))
+                lww.select(col("k"), col("b_alive").as("alive"),
+                  col("b_val").as("balance"), col("bn").as("n_changes"))
+              else {
+                val prev = Footers.read(spark, Seq(statePath.toString))
+                // batch-wins is decided on KEY PRESENCE (lww("k") not
+                // null), never by coalescing payloads: a last writer whose
+                // value IS NULL must overwrite the older balance with
+                // NULL, exactly as the batch apply and the shared oracle do
+                val inBatch = lww("k").isNotNull
+                prev.join(lww, prev("k") === lww("k"), "full_outer")
+                  .select(
+                    coalesce(lww("k"), prev("k")).as("k"),
+                    when(inBatch, col("b_alive")).otherwise(col("alive"))
+                      .as("alive"),
+                    when(inBatch, col("b_val")).otherwise(col("balance"))
+                      .as("balance"),
+                    (coalesce(col("n_changes"), lit(0L)) +
+                      coalesce(col("bn"), lit(0L))).as("n_changes"))
+              }
+            merged.write.mode("overwrite").parquet(stage.toString)
+            Files.writeString(stage.resolve("_applied_batch"), batchId.toString)
+            true
+          }
+        }
+        ()
+      })
+    Footers.read(spark, Seq(statePath.toString))
   }
 
   /** Sliding 1-hour windows every 15 minutes over the stream — the
@@ -693,31 +632,21 @@ object StreamingOps {
     * readability for free: a probe strictly inside chunk 3's recorded
     * zone span reads exactly 1 of the 4 dirs (`probe_dirs_read`). */
   def streamTableIngest(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val scratch = graft.matview.Materializer.defaultScratch
-    val staged = Paths.get(s"$scratch/stream_ingest_src")
-    val ckpt = Paths.get(s"$scratch/stream_ingest_ckpt")
-    Seq(staged, ckpt).foreach(del)
-    Files.createDirectories(staged)
-    stageChunkFiles(spark, dir, staged)
-    val snap = new graft.matview.Snapshots(spark, s"$scratch/isnaps")
+    val staged = Paths.get(s"$defaultScratch/stream_ingest_src")
+    val ckpt = Paths.get(s"$defaultScratch/stream_ingest_ckpt")
+    Dirs.delete(ckpt)
+    stage(staged, stageChunks(graft.Tables.load(spark, dir, "events")))
+    val snap = new graft.matview.Snapshots(spark, s"$defaultScratch/isnaps")
     val t = s"events_ingest_${dirKey(dir)}"
     snap.drop(t)
-    val q = spark.readStream
-      .schema(eventsRawSchema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(staged.toString)
-      .writeStream
+    drain(replay(spark, staged, eventsRawSchema).writeStream
       .outputMode("append")
       .option("checkpointLocation", ckpt.toString)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         snap.commitAppendStats(t, batch, Seq("ts"),
           txn = Some(s"ingest-$batchId"))
         ()
-      }
-      .start()
-    try q.processAllAvailable()
-    finally q.stop()
+      })
     val committed = snap.latest(t) + 1
     // at-least-once re-delivery, simulated explicitly: batch 2's data
     // (the third staged chunk — maxFilesPerTrigger=1, mtime order) under

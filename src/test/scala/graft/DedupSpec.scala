@@ -35,7 +35,7 @@ class DedupSpec extends AnyFunSuite {
     val got = Dedup.dedupEditDistance(tsSpark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(got.toSeq == Seq((1L, 2L, 2L))) // the XX insertion, dist 2
-    graft.streaming.StreamingOps.del(java.nio.file.Paths.get(dir))
+    graft.matview.Dirs.delete(java.nio.file.Paths.get(dir))
   }
 
   import TestSpark.{spark, SF}
@@ -325,7 +325,7 @@ class DedupSpec extends AnyFunSuite {
         r.getAs[Boolean]("index_rows_ok") &&
         r.getAs[Boolean]("probe_pruned") && r.getAs[Boolean]("probe_rows_ok"))
     }
-    graft.streaming.StreamingOps.del(java.nio.file.Paths.get(dir))
+    graft.matview.Dirs.delete(java.nio.file.Paths.get(dir))
   }
 
   test("embedding-dedup recall contract: ~1.0 at the design point, >= 0.9 measured") {

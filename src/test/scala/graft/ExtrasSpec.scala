@@ -236,7 +236,7 @@ class ExtrasSpec extends AnyFunSuite {
     assert(cp.head.getDate(1).toString == "2024-03-10")
     assert(cp.head.getDouble(2) == 1.0 && cp.head.getDouble(3) == 5.0)
     assert(cp.head.getDouble(4) == 4.0)
-    graft.streaming.StreamingOps.del(java.nio.file.Paths.get(dir))
+    graft.matview.Dirs.delete(java.nio.file.Paths.get(dir))
   }
 
   test("forecast backtest: a perfectly weekly-periodic series scores " +
@@ -255,7 +255,7 @@ class ExtrasSpec extends AnyFunSuite {
         (r.getLong(1), r.getDouble(2), r.getDouble(3)))).toMap
     assert(got("p1") == ((7L, 0.0, 0.0)))
     assert(got("p2") == ((7L, 7.0, 7.0)))
-    graft.streaming.StreamingOps.del(java.nio.file.Paths.get(dir))
+    graft.matview.Dirs.delete(java.nio.file.Paths.get(dir))
     // and the real fixture yields a row per type with finite errors
     val real = graft.ext.EventOps.eventsForecastBacktest(spark, SF).collect()
     assert(real.nonEmpty && real.forall(r => r.getLong(1) > 0))

@@ -94,7 +94,7 @@ class TextMultimodalSpec extends AnyFunSuite {
       .collect()
     assert(got.map(_.getLong(0)).toSeq == Seq(1L, 3L))
     assert(got.find(_.getLong(0) == 3L).get.isNullAt(6)) // empty doc: NULL rms
-    graft.streaming.StreamingOps.del(java.nio.file.Paths.get(dir))
+    graft.matview.Dirs.delete(java.nio.file.Paths.get(dir))
   }
 
   test("token budget survives a degenerate single-score corpus") {
