@@ -113,7 +113,7 @@ object Bench {
     "events_window_tumbling",// event-time bucketing
     // r8 additions (previously correctness-only, now probed per round):
     "lookup_bucket_pruned",  // index-analog point lookup (incl. build)
-    "text_bpe_train",        // driver-iterated BPE merge loop
+    "text_bpe_train",        // one type-count job + driver-side merges
     "events_stream_heavy_hitters") // CMS state across micro-batches
 
   /** The sf1 tier in run order. The quiet baselines were measured in

@@ -1,8 +1,11 @@
 package graft.ext
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.Tables._
 
@@ -965,23 +968,26 @@ object TextOps {
     * exporting word counts to a separate trainer. Classic byte-pair
     * encoding over the corpus word-frequency table: start from character
     * symbols, repeatedly (6 rounds) find the adjacent symbol pair with
-    * the highest corpus-weighted count (ties: lexicographically smallest
-    * pair — a total order, so training is deterministic) and merge its
-    * non-overlapping occurrences greedily left-to-right. Emits the merge
-    * table — the trained artifact a tokenizer loads.
+    * the highest corpus-weighted count (ties: smallest pair in Spark's
+    * binary UTF-8 string order — a total order, so training is
+    * deterministic) and merge its non-overlapping occurrences greedily
+    * left-to-right. Emits the merge table — the trained artifact a
+    * tokenizer loads.
     *
-    * Scale shape: BPE only ever needs the WORD-FREQUENCY table (one
-    * corpus scan), which is Heaps-law small relative to the corpus;
-    * each round is one keyed pair-count aggregate over the symbol
-    * streams plus a 1-row argmax action (the driver-orchestrated
-    * fixpoint idiom shared with PageRank/BFS, localCheckpoint per round
-    * so lineage stays flat), and the merge itself is a row-local array
-    * fold — no shuffle. The greedy fold (merge when the accumulator's
-    * last symbol is `a` and the next is `b`) handles overlapping runs
-    * exactly like the sequential algorithm: in a run of k identical
-    * symbols it merges floor(k/2) leftmost pairs. The oracle replays
-    * every round with the run-parity window formulation, which is
-    * provably the same greedy choice set. */
+    * Scale shape: BPE only ever needs the WORD-TYPE table `(w, freq,
+    * syms)`, which is Heaps-law small relative to the corpus. Building
+    * it is the one corpus-scale job (scan, explode, keyed count, split
+    * into character symbols); the table is collected once and the
+    * rounds run on the driver over it, so training costs no Spark job
+    * per round and is bounded by the vocabulary size, not the corpus
+    * size. The contract is that the type table fits on the driver — the
+    * same one HF tokenizers and sentencepiece make when they train from
+    * in-memory word counts (Sennrich et al., ACL 2016). The greedy fold
+    * ([[bpeMerge]]: merge when the output's last symbol is `a` and the
+    * next is `b`) handles overlapping runs exactly like the sequential
+    * algorithm: in a run of k identical symbols it merges floor(k/2)
+    * leftmost pairs. The oracle replays every round with the run-parity
+    * window formulation, which is provably the same greedy choice set. */
   def textBpeTrain(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     bpeTrain(s, d, rounds = 6)._2
@@ -989,75 +995,84 @@ object TextOps {
       .orderBy("round")
   }
 
-  /** The shared training loop behind [[textBpeTrain]] (merge table) and
+  /** The shared trainer behind [[textBpeTrain]] (merge table) and
     * [[corpusBpeEncode]] (final symbol table): returns the post-training
-    * word relation `(w, freq, syms)` and the merge sequence. */
+    * word types `(w, freq, syms)` and the merge sequence. */
   private def bpeTrain(s: SparkSession, d: String, rounds: Int)
-      : (DataFrame, Seq[(Int, String, String, String, Long)]) = {
+      : (Seq[(String, Long, Array[String])],
+         Seq[(Int, String, String, String, Long)]) = {
     var words = load(s, d, "documents")
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .select(col("w"), col("freq"), split(col("w"), "").as("syms"))
-      .localCheckpoint()
+      .collect().toSeq
+      .map(r => (r.getString(0), r.getLong(1), r.getSeq[String](2).toArray))
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]
     var k = 1
     var exhausted = false
     while (k <= rounds && !exhausted) {
-      val pairs = words
-        .select(col("freq"), explode(expr(
-          """transform(slice(syms, 1, size(syms) - 1),
-            |  (x, i) -> struct(x AS l, element_at(syms, i + 2) AS r))"""
-            .stripMargin)).as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("freq")).as("cnt"))
-      // 1-row bounded action — the same driver-argmax contract as the
-      // PageRank node count; the pair table is Heaps-law small
-      val bestRows = pairs.orderBy(col("cnt").desc, col("l"), col("r"))
-        .limit(1).collect()
+      val pairs = mutable.HashMap.empty[(String, String), Long]
+      for ((_, freq, syms) <- words; i <- 0 until syms.length - 1) {
+        val p = (syms(i), syms(i + 1))
+        pairs(p) = pairs.getOrElse(p, 0L) + freq
+      }
       // a corpus can run out of adjacent pairs before `rounds` (every
-      // word fully merged, or all words single-symbol): training stops
-      // — collect()(0) on the empty argmax threw IndexOutOfBounds here
-      // (r14 review find). The oracle suppresses the same rounds via
-      // WHERE EXISTS over its argmax CTE, and the symbol state is stable
-      // under a no-op round, so engine and replay stay aligned.
-      if (bestRows.isEmpty) exhausted = true
+      // word fully merged, or all words single-symbol): training stops.
+      // The oracle suppresses the same rounds via WHERE EXISTS over its
+      // argmax CTE, and the symbol state is stable under a no-op round,
+      // so engine and replay stay aligned.
+      if (pairs.isEmpty) exhausted = true
       else {
-        val best = bestRows(0)
-        val (a, b, cnt) = (best.getString(0), best.getString(1),
-          best.getLong(2))
+        val ((a, b), cnt) = pairs.minBy { case ((l, r), c) => (-c, l, r) }(
+          Ordering.Tuple3(Ordering.Long, sparkStringOrder, sparkStringOrder))
         merges += ((k, a, b, a + b, cnt))
-        def q(x: String): String =
-          x.replace("\\", "\\\\").replace("'", "\\'")
-        words = words.select(col("w"), col("freq"), expr(
-          s"""aggregate(syms, CAST(array() AS array<string>), (acc, x) ->
-             |  CASE WHEN size(acc) > 0
-             |            AND element_at(acc, size(acc)) = '${q(a)}'
-             |            AND x = '${q(b)}'
-             |       THEN concat(slice(acc, 1, size(acc) - 1),
-             |                   array('${q(a)}${q(b)}'))
-             |       ELSE concat(acc, array(x)) END)""".stripMargin)
-          .as("syms"))
-          .localCheckpoint()
+        words = words.map { case (w, freq, syms) =>
+          (w, freq, bpeMerge(syms, a, b)) }
       }
       k += 1
     }
     (words, merges.result())
   }
 
+  /** Strings in Spark's `ORDER BY` order: unsigned UTF-8 bytes. It
+    * differs from UTF-16 `String.compareTo` once a comparison puts a
+    * character in U+E000..U+FFFF against a supplementary one. The BPE
+    * argmax breaks ties in this order, as the oracle's `ORDER BY` does. */
+  private val sparkStringOrder: Ordering[String] = (x, y) =>
+    UTF8String.fromString(x).binaryCompare(UTF8String.fromString(y))
+
+  /** One BPE merge of the pair (`a`, `b`) over a word's symbols: a
+    * left-to-right fold that replaces the output's last symbol with
+    * `a + b` when that symbol is `a` and the next input symbol is `b`.
+    * A merged symbol never equals `a`, so in a run of k identical
+    * symbols the fold merges the floor(k/2) leftmost pairs. */
+  private[graft] def bpeMerge(syms: Array[String], a: String, b: String)
+      : Array[String] = {
+    val out = mutable.ArrayBuffer.empty[String]
+    for (x <- syms) {
+      if (out.nonEmpty && out.last == a && x == b) out(out.length - 1) = a + b
+      else out += x
+    }
+    out.toArray
+  }
+
   /** BPE ENCODING — the apply half of the tokenizer loop: run the
     * trained merge table over the corpus and report per document its
     * word/char counts, post-BPE token count, and chars-per-token
-    * compression. Because BPE operates on word TYPES, encoding is a
-    * broadcast join from each document's words to the trained
-    * word -> |symbols| table (Heaps-law small) — the corpus-scale side
-    * never shuffles for the lookup, and per-doc totals are one keyed
+    * compression. Because BPE operates on word TYPES, the trainer's
+    * final driver-side type table gives each word its |symbols|, and
+    * encoding is a broadcast join from each document's words to that
+    * word -> |symbols| table (Heaps-law small, the same fits-on-the-
+    * driver contract as training) — the corpus-scale side never
+    * shuffles for the lookup, and per-doc totals are one keyed
     * aggregate. The compression ratio is a single long/long IEEE
     * division. */
   def corpusBpeEncode(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
     val (words, _) = bpeTrain(s, d, rounds = 6)
-    val sizes = words.select(col("w"),
-      size(col("syms")).cast("long").as("n_bpe"))
+    val sizes = words.map { case (w, _, syms) => (w, syms.length.toLong) }
+      .toDF("w", "n_bpe")
     load(s, d, "documents")
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0)

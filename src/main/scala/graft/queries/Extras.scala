@@ -1408,12 +1408,16 @@ object Extras {
     * MERGES across batches (the mergeable-partial contract is exactly
     * what streaming state needs), and after the drain each window's
     * sketch is probed for keys above 3% of the window's mass. The key
-    * stream plants 7 hot keys (~30% of events over users < 45, ~4.3%
-    * each) against a uniform 0.67% tail — the sketch must separate the
-    * two through collision noise. At the gate SF the probe enumerates
-    * the whole 112-key planted domain; at corpus scale the candidate
-    * set comes from a deterministic row sample exactly as in
-    * [[aggCmsHeavyHitters]]. Counters, probes, and estimates replay
+    * stream folds users < 45 into 7 keys (`user_id mod 7`). At the gate
+    * SF (sf0.01, 150 users) those users hold ~30% of events, so the 7
+    * keys are hot (~4.3% each) against a uniform 0.67% tail and the
+    * sketch must separate the two through collision noise. The hot share
+    * is not scale-invariant: at sf0.1 (1,500 users) users < 45 hold 2.9%
+    * of events, no key crosses 3%, and the answer is empty. The probe is
+    * always the fixed candidate set `range(150)` folded the same way —
+    * the whole 112-key domain at sf0.01, and only its first 150 users
+    * at larger scales (no sampled candidates as in
+    * [[aggCmsHeavyHitters]]). Counters, probes, and estimates replay
     * bit-exactly in the oracle (SplitMix64 chains + power-of-two
     * modulus, per window). */
   def eventsStreamHeavyHitters(s: SparkSession, d: String): DataFrame = {
